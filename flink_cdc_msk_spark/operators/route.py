@@ -260,6 +260,8 @@ def route_mysql_cdc(
     ``payload_schema=None`` (pandas byte-parity mode, which forwards
     the full parsed JSON) for topics that drift.
     """
+    # A21 null guard, on the raw line (see _finish)
+    df = df.filter(F.col(value_col).isNotNull())
     if rebalance:
         # A12: `source.rebalance` (scala:95) — round-robin skew breaker.
         df = df.repartition(rebalance)
@@ -377,6 +379,8 @@ def route_mongo_cdc(
     """Mongo change-stream JSON lines → routed CDC records
     (MongoCDC2AWSMSK.scala:79-102). The raw line is forwarded untouched
     (scala:97,100 — no truncation, no re-serialization on the Mongo path)."""
+    # A21 null guard, on the raw line (see _finish)
+    df = df.filter(F.col(value_col).isNotNull())
     if rebalance:
         df = df.repartition(rebalance)
 
@@ -427,17 +431,18 @@ def _finish(
     out_cols = ["db", "table", "partition_key", "topic"] + (
         ["partition"] if num_partitions is not None else []
     ) + ["value"]
-    # A21: trailing null guard (emr/MySQLCDC2AWSMSK.scala:160). Unroutable
-    # lines (no JSON, no source block) SURVIVE with null db/table/topic —
-    # the reference's Gson parse would throw and fail the job; here the
-    # caller quarantines or drops them (query cdc_route_malformed pins the
-    # drop). Deliberately NOT filtered here: any predicate on the derived
-    # columns is pushed below this projection with the whole from_json
-    # inlined (PushPredicateThroughProject splits conjunctions, and
-    # nondeterministic barriers don't stop the inferred-constraint copies)
-    # — measured 2.5× on the route hot path.
-    return (
-        df.withColumns(cols)
-        .select(*out_cols)
-        .filter(F.col("value").isNotNull())
-    )
+    # A21: the reference's null guard (emr/MySQLCDC2AWSMSK.scala:160)
+    # sits at the top of route_mysql_cdc / route_mongo_cdc, on the raw
+    # line, not here on ``value``. Every value form (the truncation UDF,
+    # the JVM re-serialization, the pass-through) is null exactly when
+    # the raw line is, so both drop the same rows. But a predicate on
+    # ``value`` is pushed below this projection with the whole value
+    # expression inlined (PushPredicateThroughProject): on the pandas
+    # truncation path that plans a second ArrowEvalPython, its inputs
+    # re-parsing the line with from_json, and the UDF runs twice per row.
+    # On the raw column it stays a plain filter over the scan.
+    # Unroutable lines (no JSON, no source block) survive with null
+    # db/table/topic: the reference's Gson parse would throw and fail the
+    # job; here the caller quarantines or drops them (query
+    # cdc_route_malformed pins the drop).
+    return df.withColumns(cols).select(*out_cols)

@@ -691,7 +691,7 @@ def _bucket_blas_pairs(
             gnv = nv[s0:e0]
             gtb = tbs[:t, s0:e0]
             ch = max(8, min(256, 4_000_000 // gn))
-            for s in range(0, gn - 1, ch):
+            for s in range(0, gn, ch):
                 e = min(s + ch, gn)
                 C = gv[s:e]
                 acc = np.zeros((e - s, gn), dtype=np.float64)

@@ -62,6 +62,16 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # Past 32 paths InMemoryFileIndex lists files with a parallel
+        # Spark job; in local mode that job runs in this same JVM, so it
+        # is pure scheduling cost — 0.4-0.7 s on every file-stream
+        # micro-batch that picks up more than 32 files. A cluster keeps
+        # the default: there the job spreads a large listing over hosts.
+        b = b.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(1 << 30),
+        )
     if rocksdb_state:
         # Parity with the reference's RocksDB state backend
         # (emr/MySQLCDC2AWSMSK.scala:59): spill-aware streaming state for

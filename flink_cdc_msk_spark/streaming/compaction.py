@@ -6,11 +6,13 @@ table: newest ``ts_ms`` per primary key wins, deletes remove the key —
 the streaming twin of plans/cdc_queries.cdc_latest_state.
 
 The local sink is a parquet directory rewritten per batch (fine for tests;
-the batch is the unit of atomicity). On a production lake the body of
-``_merge_batch`` becomes a MERGE INTO against Delta/Iceberg/Hudi — the
-dataflow (group to latest per key inside the batch, then upsert) is
-identical, and that per-batch pre-compaction is what keeps the MERGE's
-shuffle proportional to the *batch*, not the table.
+the batch is the unit of atomicity). Each batch runs one newest-per-key
+window over the state plus the batch; with ``num_buckets`` set, only the
+state's touched pk-hash buckets are read, so the merge shuffle is
+proportional to those buckets and the batch, not the table. On a
+production lake the merge becomes a MERGE INTO against
+Delta/Iceberg/Hudi, which needs at most one source row per key: there
+the batch is first reduced to its newest change per key, then upserted.
 """
 
 from __future__ import annotations
@@ -51,15 +53,21 @@ def latest_per_key(df: DataFrame, pk_cols: list[str]) -> DataFrame:
     ).drop("_rn")
 
 
-def read_parquet_or_none(spark, path: str) -> DataFrame | None:
+def read_parquet_or_none(spark, path: str, schema=None) -> DataFrame | None:
     """Scan of a parquet state table, or None before its first write.
     Only a genuinely-missing path means 'first batch' — any other read
     failure (partial table after a crash, corrupt footer) re-raises
-    instead of silently discarding the state."""
+    instead of silently discarding the state.
+
+    ``schema``: the table's schema (or a subset of its columns) when the
+    caller knows it — a sink that writes the table does. Without it
+    Spark infers the schema from the footers with one extra Spark job
+    per read."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
@@ -108,12 +116,17 @@ class ParquetUpsertSink:
         retain_tombstones: bool = False,
     ):
         """``transform`` (optional): a DataFrame→DataFrame applied to each
-        batch's latest-per-key changes BEFORE the merge — this is the
+        batch's parsed change rows — every change, not only the newest
+        per key — BEFORE the merge. This is the
         incremental-view-maintenance hook (e.g. broadcast-join a dimension
         so the materialized state is the ENRICHED view; work stays
         proportional to the batch, the view is never recomputed from
-        scratch).  Must be deterministic and key-preserving; deletes pass
-        through it too, so enrichment joins must be left joins.
+        scratch).  Must be row-wise (one output row per change row, the
+        key, ``op`` and ``ts_ms`` carried through unchanged) and
+        deterministic, so that applying it before the newest-per-key
+        pick equals applying it after; deletes pass through it too, so
+        enrichment joins must be left joins. Its output schema is the
+        state table's schema.
 
         ``retain_tombstones=False`` (default) drops deleted keys at merge
         time — correct ONLY under the per-key in-order arrival a keyed
@@ -136,19 +149,18 @@ class ParquetUpsertSink:
         ).cast("int")
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        """One newest-per-key window over (state ∪ the batch's parsed
+        changes) ranks a key's changes in this batch and its stored row
+        together. The state is read with the changes' schema, so no
+        inference job runs."""
         spark = batch.sparkSession
-        changes = latest_per_key(
-            parse_change_events(batch, self.pk_cols), self.pk_cols
-        )
+        changes = parse_change_events(batch, self.pk_cols)
         if self.transform is not None:
             changes = self.transform(changes)
         if self.num_buckets is None:
             self._merge_full(spark, changes)
         else:
             self._merge_bucketed(spark, changes)
-
-    def _read_current(self, spark) -> DataFrame | None:
-        return read_parquet_or_none(spark, self.path)
 
     def _swap_in(self, stage: str) -> None:
         """Atomically (rename-level) replace the table dir with the staged
@@ -166,17 +178,18 @@ class ParquetUpsertSink:
         os.rename(stage, self.path)
         shutil.rmtree(old, ignore_errors=True)
 
-    def _merge_full(self, spark, changes: DataFrame) -> None:
-        current = self._read_current(spark)
-        merged = (
-            changes
-            if current is None
-            else latest_per_key(current.unionByName(changes), self.pk_cols)
-        )
-        live = (
+    def _live(self, rows: DataFrame) -> DataFrame:
+        merged = latest_per_key(rows, self.pk_cols)
+        return (
             merged
             if self.retain_tombstones
             else merged.filter(F.col("op") != "d")
+        )
+
+    def _merge_full(self, spark, changes: DataFrame) -> None:
+        current = read_parquet_or_none(spark, self.path, changes.schema)
+        live = self._live(
+            changes if current is None else current.unionByName(changes)
         )
         # stage to a NEW dir (the plan still reads the live table), then swap
         stage = f"{self.path}__stage"
@@ -184,27 +197,14 @@ class ParquetUpsertSink:
         self._swap_in(stage)
 
     def _merge_bucketed(self, spark, changes: DataFrame) -> None:
-        changes = changes.withColumn("bucket", self._bucket()).cache()
+        changes = changes.withColumn("bucket", self._bucket())
         touched = [r.bucket for r in changes.select("bucket").distinct().collect()]
-        current = self._read_current(spark)
-        if current is None:
-            merged = changes
-        else:
-            merged = latest_per_key(
-                current.filter(
-                    F.col("bucket").isin(touched)  # partition-pruned read
-                ).unionByName(changes),
-                self.pk_cols,
-            )
-        live = (
-            merged
-            if self.retain_tombstones
-            else merged.filter(F.col("op") != "d")
-        )
-        try:
-            stage_and_swap_buckets(self.path, live, touched)
-        finally:
-            changes.unpersist()
+        current = read_parquet_or_none(spark, self.path, changes.schema)
+        if current is not None:
+            changes = current.filter(
+                F.col("bucket").isin(touched)  # partition-pruned read
+            ).unionByName(changes)
+        stage_and_swap_buckets(self.path, self._live(changes), touched)
 
 
 class Scd2IntervalSink:
@@ -256,19 +256,20 @@ class Scd2IntervalSink:
         log = changes.select(
             *self.pk_cols, "op", "ts_ms", "payload", "bucket"
         )
-        current = read_parquet_or_none(spark, self.path)
+        # the history's (pk, op, valid_from, payload, bucket) columns are
+        # the log's own, renamed: read just those with a known schema
+        current = read_parquet_or_none(
+            spark,
+            self.path,
+            log.withColumnRenamed("ts_ms", "valid_from").schema,
+        )
         if current is not None:
             # a key's whole history lives in its hash bucket, so the
             # pruned read below sees every prior change of every touched
             # key — the window recompute is exact, not incremental-lossy
             log = log.unionByName(
-                current.filter(F.col("bucket").isin(touched)).select(
-                    *self.pk_cols,
-                    "op",
-                    F.col("valid_from").alias("ts_ms"),
-                    "payload",
-                    "bucket",
-                )
+                current.filter(F.col("bucket").isin(touched))
+                .withColumnRenamed("valid_from", "ts_ms")
             )
         log = log.dropDuplicates([*self.pk_cols, "ts_ms", "op"])
         # ("ts_ms", "op") tie-break: two ops at the same ts_ms (real in

@@ -25,6 +25,17 @@ def _rows(df):
     return sorted((r.id1, r.id2, r.cos) for r in df.collect())
 
 
+def _planted_bucket(spark, n: int, descending: bool):
+    """``n`` copies of one 64-dim vector, so every row shares one bucket in
+    every table, in a single partition whose row order is the id order
+    given — the verify stage keeps that order inside the bucket."""
+    ids = range(n - 1, -1, -1) if descending else range(n)
+    vec = [float(i % 7 + 1) for i in range(64)]
+    return spark.createDataFrame(
+        [(i, vec) for i in ids], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+
+
 def _emb(spark, planted: bool = False):
     if planted:
         from flink_cdc_msk_spark.plans.round10_extras import (
@@ -55,11 +66,26 @@ def _emb(spark, planted: bool = False):
         # non-portable (xxhash hyperplanes): arrow unavailable → the
         # auto entries form is the hoisted Catalyst fold
         dict(threshold=0.3, n_planes=4, n_tables=8),
+        # one hot bucket whose size is one past a verify chunk multiple,
+        # smallest id last (the chunk-boundary case of the blas verify)
+        dict(
+            threshold=0.8, n_planes=4, n_tables=8, portable_dims=64,
+            _planted_bucket=(257, True),
+        ),
+        dict(
+            threshold=0.8, n_planes=4, n_tables=8, portable_dims=64,
+            _planted_bucket=(513, True),
+        ),
     ],
 )
 def test_lsh_forms_emit_identical_pairs(spark, kw):
     kw = dict(kw)
-    emb = _emb(spark, planted=kw.pop("_planted", False))
+    bucket = kw.pop("_planted_bucket", None)
+    emb = (
+        _planted_bucket(spark, *bucket)
+        if bucket
+        else _emb(spark, planted=kw.pop("_planted", False))
+    )
     legacy = _rows(S.lsh_near_dup_pairs(emb, **kw, **LEGACY))
     assert legacy  # non-degenerate corpus
     assert _rows(S.lsh_near_dup_pairs(emb, **kw)) == legacy
@@ -80,6 +106,19 @@ def test_lsh_forms_emit_identical_pairs(spark, kw):
         )
         == legacy
     )
+
+
+@pytest.mark.parametrize("n", [257, 513])
+@pytest.mark.parametrize("descending", [False, True])
+def test_blas_verify_keeps_every_pair_of_a_hot_bucket(spark, n, descending):
+    """The blas verify walks a bucket in chunks of 256 rows; a bucket of
+    256·k + 1 rows must still make its last row a chunk row, or every
+    pair where that row holds the smaller id is lost."""
+    pairs = S.lsh_near_dup_pairs(
+        _planted_bucket(spark, n, descending),
+        threshold=0.8, n_planes=4, n_tables=8, portable_dims=64,
+    )
+    assert pairs.count() == n * (n - 1) // 2
 
 
 def test_lsh_default_plan_shape(spark):

@@ -742,3 +742,59 @@ def test_payload_schema_drift_guard(spark):
     # both modes still truncate the declared column
     assert json.loads(pd_r.value)["after"]["col1"] == "a" * 10
     assert json.loads(jvm_r.value)["after"]["col1"] == "a" * 10
+
+
+# ---- A21 null guard on the raw line: plan shape and row semantics ----
+
+
+def test_truncation_plan_runs_python_udf_once(spark):
+    """The null guard filters the raw line, so Catalyst has no predicate
+    on the UDF's output to push below the routing projection: one
+    ArrowEvalPython (one Python pass per row), and no Filter reads a
+    Python UDF result."""
+    df = spark.createDataFrame(
+        [(mysql_event(table="product_01", after={"pid": 1, "col1": "y" * 30}),)],
+        "value string",
+    )
+    out = route_mysql_cdc(df, ROUTING, topic_prefix="cdc_", num_partitions=12)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    filters = [ln for ln in plan.splitlines() if "Filter " in ln]
+    assert filters  # the raw-line guard is still there
+    assert not [ln for ln in filters if "pythonUDF" in ln], filters
+
+
+_NO_TRUNC = TableRouting.parse(
+    json.dumps([{"db": "test_db", "table": "product.*", "primary_key": "pid"}])
+)
+
+
+@pytest.mark.parametrize(
+    "mode", ["pandas", "payload_schema", "no_truncation"]
+)
+def test_null_lines_dropped_malformed_survive(spark, mode):
+    """A21 semantics on every value path: a null line is dropped; an
+    unroutable line (not JSON, or JSON without a source block) survives
+    with null db and its original bytes."""
+    kw = {
+        "pandas": {},
+        "payload_schema": {"payload_schema": _payload_schema()},
+        "no_truncation": {"routing": _NO_TRUNC},
+    }[mode]
+    good = _event_declared("product_01", after={"pid": 1, "col1": "q" * 12})
+    malformed = ["not json at all", '{"op":"c","ts_ms":1}']
+    rows = route(spark, [good, None, *malformed], **kw)
+    assert len(rows) == 3
+    [ok] = [r for r in rows if r.db is not None]
+    assert ok.partition_key == "test_db.product_01.1"
+    col1 = json.loads(ok.value)["after"]["col1"]
+    assert col1 == ("q" * 12 if mode == "no_truncation" else "q" * 10)
+    bad = [r for r in rows if r.db is None]
+    assert sorted(r.value for r in bad) == sorted(malformed)
+    assert all(r.table is None and r.topic is None for r in bad)
+
+
+def test_mongo_null_lines_dropped(spark):
+    df = spark.createDataFrame([(mongo_event(),), (None,)], "value string")
+    [r] = route_mongo_cdc(df, topic_prefix="cdc_").collect()
+    assert r.value == mongo_event()

@@ -869,3 +869,132 @@ def test_scd2_sink_out_of_order_converges(spark, tmpdir):
     assert rows["c"].is_current == 0
     assert rows["u"].valid_to is None
     assert rows["u"].is_current == 1
+
+
+def test_file_stream_batch_runs_no_listing_job(spark, tmpdir):
+    """A micro-batch of more than 32 files must not list them with a
+    Spark job (InMemoryFileIndex's parallel listing, pure scheduling
+    cost in local mode): with a no-op sink the query runs no job at
+    all."""
+    import os
+
+    from flink_cdc_msk_spark.streaming.pipeline import (
+        stream_lines_from_directory,
+    )
+
+    src = f"{tmpdir}/many"
+    os.makedirs(src)
+    for i in range(40):
+        with open(f"{src}/part-{i:03d}.txt", "w") as fh:
+            fh.write(f"line {i}\n")
+    q = (
+        stream_lines_from_directory(spark, src, max_files_per_trigger=None)
+        .writeStream.foreachBatch(lambda batch, batch_id: None)
+        .option("checkpointLocation", f"{tmpdir}/ckpt_listing")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    # one batch took all 40 files (the no-op sink reads no rows, so the
+    # source's own log is the witness)
+    assert len(q.recentProgress) == 1
+    with open(f"{tmpdir}/ckpt_listing/sources/0/0") as fh:
+        assert len(fh.read().splitlines()) == 1 + 40  # version line + files
+    tracker = spark.sparkContext.statusTracker()
+    assert list(tracker.getJobIdsForGroup(str(q.runId))) == []
+
+
+# ---- ParquetUpsertSink: one newest-per-key window over state ∪ batch ----
+
+
+def _change(op, key, ts, v):
+    image = {"o_orderkey": key, "v": v}
+    return json.dumps(
+        {
+            "before": image if op == "d" else None,
+            "after": None if op == "d" else image,
+            "source": {"db": "test_db", "table": "orders"},
+            "op": op,
+            "ts_ms": ts,
+        }
+    )
+
+
+# (op, key, ts_ms, v) per micro-batch, in arrival order within the batch
+MERGE_BATCHES = [
+    # seeds the state
+    [("c", 1, 10, "a"), ("c", 4, 11, "x"), ("c", 5, 12, "p")],
+    [
+        ("c", 2, 21, "c0"), ("u", 2, 22, "c1"), ("u", 2, 23, "c2"),  # c→u→u
+        ("u", 3, 31, "u0"), ("d", 3, 32, "u0"),  # u→d, key not in state
+        ("d", 1, 41, "a"), ("c", 1, 42, "a2"),  # d→c, key in state
+        ("u", 4, 50, "y"),  # key in state, updated
+        ("d", 5, 60, "p"),  # key in state, deleted
+        ("u", 6, 71, "n1"), ("c", 6, 70, "n0"),  # out of order in the batch
+    ],
+]
+# a re-delivered micro-batch must leave the state unchanged
+MERGE_BATCHES.append(MERGE_BATCHES[1])
+
+
+def _replay(batches, retain_tombstones):
+    """Pure-Python latest state: the newest change per key wins; deletes
+    are dropped unless tombstones are retained."""
+    latest = {}
+    for batch in batches:
+        for op, key, ts, v in batch:
+            if key not in latest or ts > latest[key][1]:
+                latest[key] = (op, ts, v)
+    return sorted(
+        (str(k), op, ts, v)
+        for k, (op, ts, v) in latest.items()
+        if retain_tombstones or op != "d"
+    )
+
+
+@pytest.mark.parametrize("retain_tombstones", [False, True])
+@pytest.mark.parametrize("num_buckets", [None, 8])
+def test_upsert_merge_equals_replay(
+    spark, tmpdir, num_buckets, retain_tombstones
+):
+    path = f"{tmpdir}/state"
+    sink = ParquetUpsertSink(
+        path,
+        ["o_orderkey"],
+        num_buckets=num_buckets,
+        retain_tombstones=retain_tombstones,
+    )
+    for batch_id, batch in enumerate(MERGE_BATCHES):
+        lines = [(_change(*c),) for c in batch]
+        sink(spark.createDataFrame(lines, "value string"), batch_id)
+        got = sorted(
+            (r.o_orderkey, r.op, r.ts_ms, r.payload["v"])
+            for r in spark.read.parquet(path).collect()
+        )
+        assert got == _replay(MERGE_BATCHES[: batch_id + 1], retain_tombstones)
+
+
+def test_upsert_transform_sees_every_change(spark, tmpdir):
+    """``transform`` runs row-wise on the parsed change rows before the
+    one merge window; its columns land in the state table."""
+    path = f"{tmpdir}/state_t"
+    seen = []
+
+    def tag(changes):
+        seen.append(changes.count())
+        return changes.withColumn("tag", F.upper(changes["payload"]["v"]))
+
+    sink = ParquetUpsertSink(
+        path, ["o_orderkey"], num_buckets=8, transform=tag,
+        retain_tombstones=True,
+    )
+    for batch_id, batch in enumerate(MERGE_BATCHES[:2]):
+        lines = [(_change(*c),) for c in batch]
+        sink(spark.createDataFrame(lines, "value string"), batch_id)
+    assert seen == [len(b) for b in MERGE_BATCHES[:2]]
+    got = sorted(
+        (r.o_orderkey, r.op, r.ts_ms, r.payload["v"], r.tag)
+        for r in spark.read.parquet(path).collect()
+    )
+    want = _replay(MERGE_BATCHES[:2], True)
+    assert got == [(*row, row[3].upper()) for row in want]

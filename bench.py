@@ -184,10 +184,15 @@ def main() -> None:
         out["warm_queries"] = warm
         out["warm_total"] = round(sum(warm.values()), 3)
         out["warm_rounds"] = warm_rounds
-    spark.stop()
     # post-draw probe AFTER spark.stop() so the probe measures the box,
-    # not leftover executor threads
-    out["load_probe"] = {"pre": probe_pre, "post": _load_probe(os.cpu_count() or 4)}
+    # not leftover executor threads; a failure in either costs the
+    # probe reading (-1.0), never the timing line
+    try:
+        spark.stop()
+        post = _load_probe(os.cpu_count() or 4)
+    except Exception:
+        post = -1.0
+    out["load_probe"] = {"pre": probe_pre, "post": post}
     print(json.dumps(out))
 
 

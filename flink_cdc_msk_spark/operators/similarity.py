@@ -37,75 +37,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column, dims: int) -> Column:
-    """``dot`` with the fold UNROLLED into a flat left-deep ADD chain:
-    ``((0.0 + a[1]*b[1]) + a[2]*b[2]) + ...`` — bit-identical to the
-    sequential fold (same summation order, IEEE addition is the same
-    operation either way) but a plain codegen expression instead of an
-    INTERPRETED higher-order aggregate. Requires the vector width to be
-    known at plan time. Measured ~5× on the LSH verify hot path, where
-    the fold's per-row interpreter overhead dominated (81M candidate
-    pairs at sfx1)."""
-    acc = F.lit(0.0)
-    for i in range(1, dims + 1):
-        acc = acc + F.element_at(a, i) * F.element_at(b, i)
-    return acc
-
-
-def weighted_sum_unrolled(a: Column, weights: list[float]) -> Column:
-    """Unrolled ``dot(a, lit(weights))`` for plan-constant weights —
-    same left-deep order as the fold over a zipped literal array."""
-    acc = F.lit(0.0)
-    for i, w in enumerate(weights, start=1):
-        acc = acc + F.element_at(a, i) * F.lit(float(w))
-    return acc
-
-
-def weighted_sum_unrolled_cast(
-    col: Column | str, weights: list[float]
-) -> Column:
-    """``weighted_sum_unrolled(as_double(col), w)`` with the cast moved
-    INSIDE each term: ``element_at(v, i).cast(double) * w`` picks element
-    i and casts it, instead of referencing a ``transform(v, cast)`` array
-    per term. Same element, same cast → bit-identical doubles — but the
-    expression carries NO lambda nodes (each ``transform`` reference
-    costs a full array rebuild per TERM at eval time, and every lambda
-    costs Catalyst a scoped resolution per ANALYSIS — ruinous when a
-    32-projection × 64-term tree is re-analyzed per micro-batch action,
-    r12 event-log evidence: 245 s inter-job driver gap)."""
-    if isinstance(col, str):
-        # Build the whole left-deep chain as ONE parsed SQL expression:
-        # constructing it Column-by-Column costs ~5 Py4J round-trips per
-        # TERM (≈10k socket turnarounds for a 32×64 bucket projection,
-        # re-paid per micro-batch — the r12 jstack samples caught the
-        # driver inside functions.element_at reflection and the stream
-        # thread blocked on the Py4J socket). The parsed tree is the
-        # same Add/Multiply/Cast/ElementAt chain: `D`-suffixed literals
-        # are doubles, so no implicit coercion differs.
-        terms = "0.0D"
-        for i, w in enumerate(weights, start=1):
-            terms = (
-                f"({terms} + (CAST(element_at(`{col}`, {i}) AS DOUBLE)"
-                f" * {float(w)!r}D))"
-            )
-        return F.expr(terms)
-    acc = F.lit(0.0)
-    for i, w in enumerate(weights, start=1):
-        acc = acc + F.element_at(col, i).cast("double") * F.lit(float(w))
-    return acc
-
-
-def norm_unrolled(a: Column, dims: int) -> Column:
-    """Unrolled ``norm`` — sqrt of the left-deep sum of squares (the
-    fold binds x per element and computes acc + x*x; the unrolled chain
-    evaluates the same element_at twice — identical value)."""
-    acc = F.lit(0.0)
-    for i in range(1, dims + 1):
-        e = F.element_at(a, i)
-        acc = acc + e * e
-    return F.sqrt(acc)
-
-
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
@@ -308,7 +239,6 @@ def random_hyperplane_buckets(
     seed: int = 42,
     portable_dims: int | None = None,
     wide: bool = False,
-    form: str = "auto",
     carry_vec: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Signed-random-projection LSH (cosine LSH) with OR-amplification:
@@ -325,33 +255,32 @@ def random_hyperplane_buckets(
     literals an external SQL engine can re-derive, and the projection
     is a plain literal-array dot (no per-row hashing at all).
 
-    ``carry_vec=(vname, nvname)`` (round 13, wide form only): the
-    float→double cast is HOISTED into its own projection (O3 pattern —
-    interpreted HOF projections get no subexpression elimination, so
-    the T·P fold projections otherwise each re-run the transform) and
-    the double vector + its norm are CARRIED through the explode as
-    ``vname``/``nvname`` columns. This kills the downstream
-    buckets⋈vecs id-join (two exchanges + two corpus-scale sorts,
-    guide §2.4) in lsh_near_dup_pairs. Bit-identical buckets: same
-    doubles through the same fold.
+    Every projection is the sequential fold — one compact HOF call per
+    projection. An unrolled ``element_at`` chain is bit-identical but a
+    32-projection × 64-term Project blows janino's 64 KB method limit
+    and interprets after a failed compile (PERF §47 addendum).
+
+    ``carry_vec=(vname, nvname)`` (wide form only): the float→double
+    cast is HOISTED into its own projection (interpreted HOF projections
+    get no subexpression elimination, so the T·P fold projections
+    otherwise each re-run the transform) and the double vector + its
+    norm are CARRIED through the explode as ``vname``/``nvname``
+    columns, with the id cast to long — the entry relation
+    lsh_near_dup_pairs verifies. Bit-identical buckets: same doubles
+    through the same fold.
     """
     if carry_vec is not None:
         if not wide:
             raise ValueError("carry_vec requires wide=True")
-        if form == "unrolled":
-            raise ValueError(
-                "carry_vec + form='unrolled' unsupported (the unrolled "
-                "chain casts per element; carry the fold form instead)"
-            )
         vname, nvname = carry_vec
         src = df.select(
-            F.col(id_col).alias("id"), as_double(vec_col).alias(vname)
+            F.col(id_col).cast("long").alias("id"),
+            as_double(vec_col).alias(vname),
         )
-        vec_ref: Column | None = F.col(vname)
+        vec, dims = F.col(vname), F.size(F.col(vname))
     else:
         src = df
-        vec_ref = None
-    dims = F.size(vec_ref if vec_ref is not None else F.col(vec_col))
+        vec, dims = as_double(vec_col), F.size(F.col(vec_col))
 
     def signed(t: int, p: int):
         # pseudo-random ±1 weights per dimension: parity of xxhash64
@@ -369,45 +298,12 @@ def random_hyperplane_buckets(
         planes = []
         for p in range(n_planes):
             if portable_dims is not None:
-                # ``form="auto"`` resolves to the FOLD: one compact HOF
-                # call per projection (~6 plan nodes), bit-identical to
-                # the unrolled chain (same left-deep summation over the
-                # same doubles). The unrolled form stays available for
-                # A/B (`form="unrolled"`) but loses in every regime the
-                # repo has measured since the r12 cast-per-element
-                # rework: a wide 32-projection × 64-term Project now
-                # blows janino's 64 KB method limit even in BATCH
-                # (CodeContext.makeSpace in the log; the pre-r12
-                # element_at-of-shared-transform form compiled because
-                # codegen deduped the one shared transform), so the
-                # stage pays a failed multi-second compile and then
-                # interprets the 2048-term chain anyway — the worst of
-                # both. Clean-box isolation at sf0.1 (fresh sessions,
-                # noop sink, warm medians of 4): fold 0.45–0.51 s vs
-                # unrolled-cast 1.75–1.92 s vs the pre-r12 compiled
-                # form 0.69–0.77 s — the fold beats even the form that
-                # compiles. In the MICRO-BATCH regime the same failed
-                # compile repeated per batch (exprIds change, nothing
-                # caches): `generate_doConsume` InternalCompiler-
-                # Exception per batch until the streaming twin moved to
-                # the fold.
                 weights = portable_plane_weights(seed, t, p, portable_dims)
-                if form == "unrolled":
-                    # per-element cast, NOT element_at over a shared
-                    # as_double transform — bit-identical values, zero
-                    # lambda nodes (see weighted_sum_unrolled_cast).
-                    proj = weighted_sum_unrolled_cast(vec_col, weights)
-                else:
-                    proj = dot(
-                        vec_ref if vec_ref is not None
-                        else as_double(vec_col),
-                        F.lit(weights),
-                    )
+                proj = dot(vec, F.lit(weights))
             else:
                 proj = F.aggregate(
                     F.zip_with(
-                        vec_ref if vec_ref is not None
-                        else as_double(vec_col),
+                        vec,
                         F.sequence(F.lit(0), dims - 1),
                         signed(t, p),
                     ),
@@ -428,16 +324,11 @@ def random_hyperplane_buckets(
     if wide:
         # wide form: each exploded row ALSO carries every table's bucket
         # (tb0..tb{T-1}) — feeds the lowest-matching-table emission rule
-        # in lsh_near_dup_pairs (PERF §42 family). The heavy projections
+        # in the verify (PERF §42 family). The heavy projections
         # evaluate once into the wide projection; the explode only
         # restructures.
         if carry_vec is not None:
-            nv_expr = (
-                norm_unrolled(F.col(vname), portable_dims)
-                if portable_dims is not None
-                else norm(F.col(vname))
-            )
-            carry_sel = [F.col(vname), nv_expr.alias(nvname)]
+            carry_sel = [F.col(vname), norm(F.col(vname)).alias(nvname)]
             carry_names = [vname, nvname]
         else:
             carry_sel, carry_names = [], []
@@ -446,25 +337,10 @@ def random_hyperplane_buckets(
             *carry_sel,
             *[e["bucket"].alias(f"tb{t}") for t, e in enumerate(entries)],
         )
-        tb = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table"), F.col(f"tb{t}").alias("bucket")
-                )
-                for t in range(n_tables)
-            ]
-        )
-        return wide_df.select(
-            "id",
-            *carry_names,
-            *[f"tb{t}" for t in range(n_tables)],
-            F.explode_outer(tb).alias("tb"),
-        ).select(
-            "id",
-            *carry_names,
-            *[f"tb{t}" for t in range(n_tables)],
-            F.col("tb.table").alias("table"),
-            F.col("tb.bucket").alias("bucket"),
+        return _explode_tables(
+            wide_df,
+            n_tables,
+            ["id", *carry_names, *[f"tb{t}" for t in range(n_tables)]],
         )
     return df.select(
         # explode_outer: plain explode makes InferFiltersFromGenerate push a
@@ -474,24 +350,24 @@ def random_hyperplane_buckets(
     ).select("id", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
 
 
-# probe-side salt slices for the LSH verify self-join: the hottest
-# bucket's pair enumeration spreads over this many tasks. 32 matches
-# the bench core count; at cluster scale set ~2-4× the executor-core
-# count of one stage wave (pure parallelism knob — results identical
-# for any value ≥ 1). Round 13: this BLANKET factor is the A/B
-# reference only — the default is the adaptive per-bucket salt below.
-_LSH_SALT = 32
-
-# adaptive salt (round 13, guide §2.5 — size the skew remedy to the
-# actual skew): a bucket of n entries enumerates ~n²/2 in-stream pairs;
-# it gets s = ceil(n² / (2 · PAIRS_PER_TASK)) salt slices so each slice
-# enumerates ≤ ~PAIRS_PER_TASK pairs (≈ seconds of fold-cosine work).
-# Cold buckets get s = 1 — no replication at all — which removes the
-# blanket ×32 payload replication through the salted exchange+sort
-# (at sfx10-hi: 56M → ~1.8M sorted heavy rows). SALT_MAX bounds the
-# replication of a pathological single bucket.
-_LSH_SALT_PAIRS_PER_TASK = 2_000_000
-_LSH_SALT_MAX = 256
+def _explode_tables(
+    wide: DataFrame, n_tables: int, keep: list[str]
+) -> DataFrame:
+    """Wide (…, tb0..tb{T-1}) rows → one (keep…, table, bucket) row per
+    table. explode_outer: plain explode makes InferFiltersFromGenerate
+    push a size()>0 filter that re-evaluates every heavy projection; the
+    array literal is never empty, so outer semantics are identical."""
+    tb = F.array(
+        *[
+            F.struct(F.lit(t).alias("table"), F.col(f"tb{t}").alias("bucket"))
+            for t in range(n_tables)
+        ]
+    )
+    return wide.select(*keep, F.explode_outer(tb).alias("_tb")).select(
+        *keep,
+        F.col("_tb.table").alias("table"),
+        F.col("_tb.bucket").alias("bucket"),
+    )
 
 
 def _arrow_wide_entries(
@@ -517,7 +393,8 @@ def _arrow_wide_entries(
     no pairwise re-association (numpy elementwise ops, NOT ``np.dot``) —
     and float→double widening is exact. Same doubles → same signs →
     same buckets → same downstream cosines; the DuckDB oracle re-derives
-    the identical fold."""
+    the identical fold. The id is cast to long on the way in, so an int
+    id column meets the declared ``id long`` schema."""
     import numpy as np
 
     wt = np.array(
@@ -573,7 +450,7 @@ def _arrow_wide_entries(
             yield pa.record_batch(cols, names=names)
 
     return df.select(
-        F.col(id_col).alias("id"), F.col(vec_col)
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col)
     ).mapInArrow(gen, out_schema)
 
 
@@ -582,12 +459,10 @@ def _bucket_blas_pairs(
 ) -> DataFrame:
     """In-bucket pair verify as ONE grouped numpy stage (guide §4.2 —
     the near_dup_pairs pattern applied per bucket): each (table, bucket)
-    group computes its candidate pair dots batch-at-a-time instead of
-    the salted SMJ enumerating them row-by-row with an interpreted fold
-    per pair (sfx10-hi: 948M in-stream candidate instances, ~500 s of
-    enumeration + fold-cosine).
+    group computes its candidate pair dots batch-at-a-time.
 
-    PROVABLY identical rows to the SMJ form — not merely empirically:
+    Same rows as the exact pair scan restricted to bucket-collision
+    candidates (the DuckDB oracle's definition), by construction:
 
     * the per-pair dot uses the same left-deep sequential accumulation
       as the zip_with fold (``acc = acc + C[:, i] * V[:, i]`` per dim —
@@ -598,11 +473,13 @@ def _bucket_blas_pairs(
       (``raw >= threshold - 1e-5``; round(x, 6) can raise x by at most
       5e-7, so no true survivor is dropped) and the exact
       ``round(·, 6) >= threshold`` happens in CATALYST on the returned
-      raw value — the same expression the SMJ form evaluates, so the
-      final pair set and the emitted ``cos`` are identical by
-      construction, with no numpy-vs-JVM rounding semantics in play;
-    * the i<j and lowest-matching-table rules are exact integer
-      compares either way.
+      raw value, so the final pair set and the emitted ``cos`` carry no
+      numpy-vs-JVM rounding semantics;
+    * a pair colliding in several tables is emitted once, from the
+      lowest table it collides in — i<j and the lowest-matching-table
+      rule are exact integer compares;
+    * a zero-norm vector pairs with nothing: 0/0 is NaN and fails the
+      margin compare (the oracle's 0/0 is NULL, which fails its filter).
 
     Shape: ONE hash repartition of the entry relation by (table,
     bucket) — corpus × T rows, linear, never pair-volume — then a
@@ -613,9 +490,8 @@ def _bucket_blas_pairs(
     most of its wall in per-group conversion overhead: 8192 groups at
     sfx10-hi). Memory: the chunked accumulator is bounded at ~32 MB
     regardless of bucket size. A pathological single bucket still runs
-    in one task — but at vectorized-numpy throughput, which shrinks the
-    skew tail by ~two orders vs the interpreted per-pair fold the salt
-    machinery was spreading."""
+    in one task — but at vectorized-numpy throughput, ~two orders faster
+    than an interpreted per-pair fold (PERF §48)."""
     import numpy as np
 
     margin = threshold - 1e-5
@@ -740,356 +616,65 @@ def lsh_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     portable_dims: int | None = None,
-    _emit_order: str = "lowest_first",
-    _stage: str | None = None,
-    _entries_form: str = "auto",
-    _salt_form: str = "auto",
-    _verify_form: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs restricted to LSH-candidate pairs — the scale path:
-    bucketing shuffles on (table, bucket) keys only (linear in
-    corpus × n_tables) and verification happens INSIDE the bucket
-    self-join. No full-matrix broadcast, no O(n²) scan. ``portable_dims``
-    switches to md5-parity hyperplanes so the whole pipeline (buckets →
-    in-bucket cosine verify, fold-order arithmetic) is reproducible in
-    an external SQL engine — the registered query runs this form under a
-    full DuckDB oracle.
+    every relation is corpus-sized (no full-matrix broadcast, no O(n²)
+    scan, nothing pair-volume shuffles) and the cosine verify happens
+    inside each (table, bucket) group. Output (id1 < id2, cos), the
+    cosine rounded to 6 places: exactly the exact pair scan
+    (:func:`near_dup_pairs_catalyst`) restricted to pairs that share a
+    bucket in at least one table. Zero-norm vectors pair with nothing.
 
-    Plan shape (reworked round 9 — the r8 shape materialized a DISTINCT
-    candidate-pair relation, then verified it with two corpus joins; at
-    sfx1 that was 81M pairs through two array-carrying SMJ sorts,
-    ~100 GB of sort payload a decade up — a disk-exhaustion cliff, and
-    93% of the operator's 500+ s):
+    ``portable_dims`` (the known vector width) switches to md5-parity
+    hyperplanes, so the whole pipeline (buckets → in-bucket fold-order
+    cosine) is reproducible in an external SQL engine — the registered
+    queries run this form under a full DuckDB oracle.
 
-    * ship each vector INTO its buckets once — one (table, bucket)
-      shuffle of corpus × n_tables rows. The float→double cast happens
-      ONCE, map-side, so the entries relation carries DOUBLE arrays
-      through the merge join and the salt replication (ADVICE r9: an
-      earlier draft of this note claimed a float-width shuffle saving
-      that the shipped plan does not have — the cast is exact and
-      map-side-once is the cheaper compute shape; deferring it past the
-      salt exchange would halve those bytes at the cost of a per-pair
-      transform allocation in the interpreted join context, the exact
-      regression the fold-form A/B below measured at 9×);
-    * per-vector norms computed ONCE here (not per pair — the r8 form
-      re-derived both norms for every candidate);
-    * self-join on (table, bucket): SMJ sorts only the bucket entry
-      relation (corpus-scale, spillable); the quadratic pair stream
-      exists ONLY inside the join's output iterator, where the cosine
-      is computed (the per-pair dot uses the sequential zip_with FOLD —
-      only the per-vector norms are unrolled; see the per-stage note
-      below) and the threshold filter drops non-survivors before
-      anything is materialized or re-shuffled;
-    * a pair colliding in k tables is verified k times (pure compute,
-      deterministic — identical cos every time) and deduped by the
-      final DISTINCT over survivors, which is linear in the RESULT, not
-      the candidate volume.
+    One pipeline, two stages:
 
-    A hot bucket of n vectors still emits C(n, 2) in-stream pairs in one
-    task — that is the operator's contract at a loose threshold (dense
-    candidates, §24); what the rework removes is the candidate-volume
-    SHUFFLE/SORT/DISK footprint, which is what actually breaks first at
-    scale. Never broadcast: every relation here is corpus-sized (the
-    one exception is the round-13 HOT-BUCKET SIZE relation, bounded by
-    the number of genuinely skewed buckets).
+    1. **Entries** — (id, v double[], nv, tb0..tb{T-1}, table, bucket),
+       one row per (vector, table): the float→double cast, the norm and
+       every hyperplane projection computed once per vector, and every
+       table's bucket carried on each row for the lowest-table rule.
+       With ``portable_dims`` one vectorized Arrow pass builds them
+       (:func:`_arrow_wide_entries`); without it, the xxhash hyperplanes
+       have no numpy twin, so the Catalyst fold projections do
+       (:func:`random_hyperplane_buckets` with ``carry_vec``). Both
+       produce the same buckets and doubles (pinned by test). The
+       relation is ``localCheckpoint``ed so the verify reads one
+       materialization instead of re-deriving the bucketing subtree.
+    2. **Verify** — one hash exchange on (table, bucket), then one
+       grouped-numpy ``mapInArrow`` stage (:func:`_bucket_blas_pairs`).
 
-    Round 13 rework (guide §2.4/§2.5/§4.2 — evidence in
-    OPTIMIZATION_r13.md and plans/r13/):
-
-    * ``_entries_form``: how the (id, v, nv, tb*, table, bucket) entry
-      relation is built. ``"arrow"`` (auto when ``portable_dims`` is
-      set): ONE vectorized mapInArrow pass computes cast+norm+all T·P
-      projections in numpy (bit-identical left-deep arithmetic — see
-      ``_arrow_wide_entries``), replacing ~10k interpreted lambda
-      invocations per row; the wide relation is ``localCheckpoint``ed
-      (pre-explode, 1/T the rows) so the a-side, b-side and bucket-size
-      branches read ONE materialization instead of re-deriving the
-      corpus subtree each (it used to run twice; three times under the
-      adaptive salt). ``"fold"`` (auto otherwise): the Catalyst fold
-      projections with the cast hoisted and v/nv carried through the
-      wide build — no buckets⋈vecs id-join (two exchanges + two
-      corpus-scale sorts removed, §2.4). ``"join"``: the pre-r13 shape,
-      kept for A/B.
-    * ``_salt_form="adaptive"`` (auto): per-bucket salt sized from the
-      measured bucket cardinality (one light (table,bucket) count pass
-      over the checkpoint) — s = ceil(n²/2·PAIRS_PER_TASK), so only
-      genuinely hot buckets replicate and the blanket ×32 payload
-      replication through the salted exchange+sort disappears
-      (sfx10-hi: 56M → ~1.8M sorted heavy rows). ``"blanket"``: the
-      pre-r13 constant ×32, kept for A/B. Identical pair set either
-      way: within a bucket, side b carries one salt in [0, s) and side
-      a carries all of [0, s), so every (a, b) entry pair meets exactly
-      once for any s ≥ 1.
+    A hot bucket of n vectors still costs C(n, 2) dots in one task —
+    the operator's contract at a loose threshold (§24) — at vectorized
+    throughput. The salted sort-merge verify and the other forms this
+    replaced are recorded in PERF §43, §47 addendum, §48 and §52.
     """
-    if _entries_form == "auto":
-        _entries_form = "arrow" if portable_dims is not None else "fold"
-    if _salt_form == "auto":
-        _salt_form = "adaptive"
-    # ``_stage``: measurement-only hook (tools/lsh_hi_decompose.py, the
-    # §40-style phase attribution) — returns the named INTERNAL sub-plan
-    # instead of the full operator. Never set by registered queries.
-    if _entries_form == "join":
-        buckets = random_hyperplane_buckets(
-            corpus, n_planes, n_tables, id_col, vec_col,
-            portable_dims=portable_dims, wide=True,
-        )
-        if _stage == "buckets":
-            return buckets
-    # Expression forms are PER STAGE, chosen from measurement (sfx1,
-    # 104M in-stream pairs; bucketing re-measured r12 third session):
-    #   * map-side per-vector norms: UNROLLED left-deep chain — a
-    #     single 64-term chain per row compiles and codegens fine;
-    #   * map-side hyperplane projections: the FOLD (buckets' form=
-    #     "auto") — the full 32-projection wide Project exceeds the
-    #     janino method limit when unrolled, so the unrolled form
-    #     interprets at unrolled cost after a failed compile; see the
-    #     measured note in random_hyperplane_buckets;
-    #   * join-side (the per-pair dot): the sequential FOLD. The join
-    #     stage's generated method (SMJ + condition + downstream) blows
-    #     the JIT method limit with a 128-node chain inlined, and the
-    #     whole stage falls back to INTERPRETED evaluation at ~118 µs/
-    #     pair (measured: 383 s for the projection alone). The HOF fold
-    #     is a single embedded call the surrounding codegen keeps at
-    #     ~13 µs/pair — 9× faster in exactly the context that matters.
-    # Both forms are bit-identical (same left-deep summation order).
-    # The cast to double happens ONCE, map-side, in the vecs projection
-    # (codegen'd): folding over pre-cast double arrays saves two
-    # per-pair transform() allocations that the interpreted fall-back
-    # context charges per reference. The entries relation that carries
-    # the double arrays through the salt exchange is corpus × tables ×
-    # salt rows — linear, never pair-volume.
-    # zip_with fold for the per-pair dot: A/B'd at sfx1 against (a) the
-    # unrolled chain (118 µs/pair — the join stage's generated method
-    # exceeds JIT limits and the whole stage interprets) and (b) an
-    # index-sequence fold (cold 469 s / warm 247 s vs this form's
-    # 422/168 s) — the zip_with fold is the fastest evaluable form in
-    # the join context.
-    dpr = dot
-    if _entries_form == "join":
-        if portable_dims is not None:
-            def nrm(c: Column) -> Column:
-                return norm_unrolled(c, portable_dims)
-        else:
-            nrm = norm
-        vecs = corpus.select(
-            F.col(id_col).alias("id"), as_double(vec_col).alias("v")
-        ).withColumn("nv", nrm(F.col("v")))
-        entries = buckets.hint("merge").join(vecs, "id")
-    elif _entries_form == "arrow":
-        if portable_dims is None:
-            raise ValueError(
-                "_entries_form='arrow' needs portable_dims (the xxhash "
-                "hyperplane scheme has no numpy twin)"
-            )
+    if portable_dims is not None:
         wide = _arrow_wide_entries(
             corpus, n_planes, n_tables, id_col, vec_col,
             dims=portable_dims,
         )
-        if _stage == "buckets":
-            return wide
-        # one materialization feeds the a-side, the b-side and the
-        # bucket-size pass (pre-explode: 1/T the rows of the entry
-        # relation; ~corpus × (8·dims+overhead) bytes — an in-query
-        # bounded intermediate, computed inside the timed region)
+        # checkpoint pre-explode: 1/T the rows of the entry relation
+        # (~corpus × (8·dims+overhead) bytes — an in-query bounded
+        # intermediate, computed inside the timed region)
         wide = wide.localCheckpoint(eager=True)
-        tb = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table"), F.col(f"tb{t}").alias("bucket")
-                )
-                for t in range(n_tables)
-            ]
+        entries = _explode_tables(
+            wide,
+            n_tables,
+            ["id", "v", "nv", *[f"tb{t}" for t in range(n_tables)]],
         )
-        entries = wide.select(
-            "id", "v", "nv",
-            *[f"tb{t}" for t in range(n_tables)],
-            F.explode_outer(tb).alias("_tb"),
-        ).select(
-            "id", "v", "nv",
-            *[f"tb{t}" for t in range(n_tables)],
-            F.col("_tb.table").alias("table"),
-            F.col("_tb.bucket").alias("bucket"),
-        )
-    else:  # "fold": Catalyst projections, cast hoisted, v/nv carried
-        entries = random_hyperplane_buckets(
-            corpus, n_planes, n_tables, id_col, vec_col,
-            portable_dims=portable_dims, wide=True,
-            carry_vec=("v", "nv"),
-        )
-        if _stage == "buckets":
-            return entries
+    else:
         # bound: corpus × n_tables rows (post-explode entry relation —
         # id, v double[dims], nv, tb*), one per query invocation,
         # dropped with the DataFrame
-        entries = entries.localCheckpoint(eager=True)
-    if _stage == "entries":
-        return entries
-    # ``_verify_form="blas"`` (auto): the grouped-numpy in-bucket verify
-    # — see _bucket_blas_pairs for the shape and the bit-identity
-    # argument. "smj" keeps the salted sort-merge self-join below (the
-    # r9–r12 form) for A/B and for the _stage="joined"/"cos_all"
-    # decomposition probes, which only exist on that path.
-    if _verify_form == "auto":
-        _verify_form = "blas"
-    if _verify_form == "blas" and _stage is None:
-        return _bucket_blas_pairs(entries, n_tables, threshold)
-    # SALTED self-join (output-skew breaker): a dense bucket of n
-    # vectors emits C(n, 2) in-stream pairs from ONE merge group — an
-    # explosion AQE's skew splitting cannot see (it keys off INPUT
-    # partition bytes; a 10⁴-vector bucket is ~3 MB in but 5·10⁷ pairs
-    # out, so the hot task runs alone while 31 cores idle — observed at
-    # sfx1: load ~8/32, 18+ min). Slicing the probe side by id hash
-    # into _LSH_SALT groups and replicating the build side across the
-    # salt spreads every bucket's pair enumeration over _LSH_SALT
-    # tasks; the replicated sort volume (entries × _LSH_SALT rows) is
-    # corpus-scale, cheap next to the pair stream it parallelizes.
-    if _salt_form == "adaptive":
-        # per-(table, bucket) cardinalities: a LIGHT pass (ids and
-        # payloads pruned) over the checkpointed wide relation; only
-        # buckets whose pair volume n²/2 exceeds PAIRS_PER_TASK get a
-        # salt factor, so the broadcast below is bounded by the number
-        # of genuinely skewed buckets, not by corpus size. n² computed
-        # in DOUBLE — counts can exceed the long-overflow bound at
-        # corpus scale (and ANSI mode makes that an error, not a wrap).
-        hot = (
-            entries.groupBy("table", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bn"))
-            .filter(
-                F.col("_bn").cast("double") * F.col("_bn").cast("double")
-                > F.lit(2.0 * _LSH_SALT_PAIRS_PER_TASK)
-            )
-            .select(
-                "table",
-                "bucket",
-                F.least(
-                    F.lit(_LSH_SALT_MAX),
-                    F.ceil(
-                        F.col("_bn").cast("double")
-                        * F.col("_bn").cast("double")
-                        / F.lit(2.0 * _LSH_SALT_PAIRS_PER_TASK)
-                    ).cast("int"),
-                ).alias("_sn"),
-            )
-        )
-        # threshold-gated, not a hard hint: the hot-bucket list is tiny
-        # on any sane corpus (only buckets with >2e6 pair volume), but
-        # it GROWS with corpus size in the adversarial case, so the
-        # census policy (PLANS.md §broadcast-census) routes it through
-        # dim_broadcast — past the bar Catalyst/AQE picks the join.
-        from .bcast import dim_broadcast
+        entries = random_hyperplane_buckets(
+            corpus, n_planes, n_tables, id_col, vec_col,
+            wide=True, carry_vec=("v", "nv"),
+        ).localCheckpoint(eager=True)
+    return _bucket_blas_pairs(entries, n_tables, threshold)
 
-        ent2 = entries.join(
-            dim_broadcast(hot), ["table", "bucket"], "left"
-        ).withColumn("_sn", F.coalesce(F.col("_sn"), F.lit(1)))
-        a = (
-            ent2.withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.col("_sn") - 1))
-            )
-            .drop("_sn")
-            .alias("a")
-        )
-        b = (
-            ent2.withColumn(
-                "salt",
-                F.pmod(F.xxhash64("id"), F.col("_sn")).cast("int"),
-            )
-            .drop("_sn")
-            .alias("b")
-        )
-    else:  # "blanket": the pre-r13 constant replication, A/B reference
-        a = entries.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(_LSH_SALT - 1)))
-        ).alias("a")
-        b = entries.withColumn(
-            "salt", F.pmod(F.xxhash64("id"), F.lit(_LSH_SALT)).cast("int")
-        ).alias("b")
-    # lowest-matching-table dedup (the §42 emission rule): within ONE
-    # table a pair joins at exactly one salt (side b carries a single
-    # id-derived salt), so cross-TABLE collisions were the only source
-    # of duplicates — and each row carries every table's bucket (wide
-    # buckets), so "no earlier table collides" is n_tables-1 in-stream
-    # long-compares. Replaces the former result-volume `.distinct()`
-    # (and runs BEFORE the cosine, so a k-table collider pays the
-    # verify arithmetic once, not k times). Bound on the carried
-    # width: n_tables longs next to a 1 KB vector payload (~6%).
-    lowest = F.lit(True)
-    for lo in range(n_tables - 1):
-        lowest = lowest & (
-            ~(
-                (F.col("a.table") > lo)
-                & (F.col(f"a.tb{lo}") == F.col(f"b.tb{lo}"))
-            )
-        )
-    # MERGE hint: corpus-sized self-join (same rationale as the
-    # simhash/minhash band joins — never broadcast, spillable SMJ)
-    joined = a.hint("merge").join(
-        b,
-        (F.col("a.table") == F.col("b.table"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.salt") == F.col("b.salt"))
-        & (F.col("a.id") < F.col("b.id")),
-    )
-    if _stage == "joined":
-        return joined
-    if _stage == "cos_all":
-        # every candidate instance pays the fold-cosine, no filters
-        return joined.select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            F.round(
-                dpr(F.col("a.v"), F.col("b.v"))
-                / (F.col("a.nv") * F.col("b.nv")),
-                6,
-            ).alias("cos"),
-        )
-    if _emit_order == "cos_first":
-        # PERF §43 bisect arm: threshold the cosine BEFORE the lowest-
-        # table compares. Exactly-once-correct like the default (both
-        # filters are deterministic per instance and commute); the
-        # trade is k cosine evaluations for a k-table collider vs
-        # (n_tables-1) long-compares on EVERY candidate instance —
-        # cos_first wins when collision multiplicity is low (sparse
-        # hi-threshold corpora), lowest_first when it's high (dense).
-        kept = joined.select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            F.round(
-                dpr(F.col("a.v"), F.col("b.v"))
-                / (F.col("a.nv") * F.col("b.nv")),
-                6,
-            ).alias("cos"),
-            F.col("a.table").alias("_t"),
-            *[
-                F.col(f"a.tb{lo}").alias(f"_a{lo}")
-                for lo in range(n_tables - 1)
-            ],
-            *[
-                F.col(f"b.tb{lo}").alias(f"_b{lo}")
-                for lo in range(n_tables - 1)
-            ],
-        ).filter(F.col("cos") >= threshold)
-        low2 = F.lit(True)
-        for lo in range(n_tables - 1):
-            low2 = low2 & (
-                ~(
-                    (F.col("_t") > lo)
-                    & (F.col(f"_a{lo}") == F.col(f"_b{lo}"))
-                )
-            )
-        return kept.filter(low2).select("id1", "id2", "cos")
-    return (
-        joined.filter(lowest)
-        .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            F.round(
-                dpr(F.col("a.v"), F.col("b.v"))
-                / (F.col("a.nv") * F.col("b.nv")),
-                6,
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
 
 def kmeans_centroids(
     corpus: DataFrame,

@@ -131,22 +131,12 @@ def embedding_near_dup_lsh_hi(spark, sf_dir):
     linear bucket build + the in-stream candidate cosine pass, not by
     result materialization (PERF §34 records the sfx10 number). No new
     operator code: same ``lsh_near_dup_pairs``, same parameterized
-    oracle template.
-
-    emit order (round 12, PERF §43): ``cos_first`` — at a HI threshold
-    the cosine rejects almost every candidate instance, so deferring
-    the (n_tables−1) lowest-table compares (14 interpreted column
-    reads) to the few survivors beats paying them on all ~10⁸-10⁹
-    instances: measured −32% cold / −20% warm at sfx10 and −20%/−31%
-    at sfx1, identical pair sets (both orders are exactly-once-correct,
-    pinned by test). The dense cos≥0.3 forms keep lowest_first (§42
-    addendum 2's 4.8×; the §43 dense A/B is ambiguous within noise)."""
+    oracle template."""
     from ..operators import similarity as S
 
     return S.lsh_near_dup_pairs(
         _emb_with_planted_neardups(spark, sf_dir),
         threshold=0.8, n_planes=10, n_tables=8, portable_dims=64,
-        _emit_order="cos_first",
     )
 
 

@@ -439,14 +439,22 @@ class StreamingVectorNearDupFilter:
         relation, not re-derived per candidate pair — a vector that
         appears in k pairs prices its norm once, and the per-pair
         filter pays only the dot. Same doubles, same fold order: the
-        rounded cosine (cosine = dot/(norm·norm)) is bit-identical."""
+        rounded cosine (cosine = dot/(norm·norm)) is bit-identical.
+
+        Zero-norm vectors are dropped before the divide: they pair with
+        nothing, as in the batch verify (NaN) and the oracle (NULL), and
+        ANSI mode would otherwise fail the batch on 0/0."""
         from ..operators.similarity import dot, norm
 
-        s1 = v1.withColumnsRenamed({"id": "id1", "v": "v1"}).withColumn(
-            "_n1", norm(F.col("v1"))
+        s1 = (
+            v1.withColumnsRenamed({"id": "id1", "v": "v1"})
+            .withColumn("_n1", norm(F.col("v1")))
+            .filter(F.col("_n1") > 0)
         )
-        s2 = v2.withColumnsRenamed({"id": "id2", "v": "v2"}).withColumn(
-            "_n2", norm(F.col("v2"))
+        s2 = (
+            v2.withColumnsRenamed({"id": "id2", "v": "v2"})
+            .withColumn("_n2", norm(F.col("v2")))
+            .filter(F.col("_n2") > 0)
         )
         return (
             pairs.join(s1, "id1")
@@ -463,7 +471,10 @@ class StreamingVectorNearDupFilter:
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        from ..operators.similarity import _arrow_wide_entries
+        from ..operators.similarity import (
+            _arrow_wide_entries,
+            _explode_tables,
+        )
 
         spark = batch.sparkSession
         # Spread the batch across the session's cores first so the
@@ -496,22 +507,7 @@ class StreamingVectorNearDupFilter:
             self.vec_col,
             dims=self.dims,
         ).localCheckpoint(eager=True)
-        tb = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table"),
-                    F.col(f"tb{t}").alias("bucket"),
-                )
-                for t in range(self.n_tables)
-            ]
-        )
-        buckets = wide.select(
-            "id", F.explode_outer(tb).alias("_tb")
-        ).select(
-            "id",
-            F.col("_tb.table").alias("table"),
-            F.col("_tb.bucket").alias("bucket"),
-        )
+        buckets = _explode_tables(wide, self.n_tables, ["id"])
         vecs = wide.select("id", "v")
 
         state = _read_or_none(spark, self.store_path)

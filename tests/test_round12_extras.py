@@ -279,32 +279,6 @@ def test_staged_ordered_units_identical_results(spark, tmp_path, monkeypatch):
     ) == mtime
 
 
-def test_lsh_emit_orders_identical(spark):
-    """Both bisect arms of the LSH emission (lowest-table filter before
-    vs after the cosine threshold) are exactly-once forms of the same
-    pair set — identical rows on the planted-near-dup corpus."""
-    from flink_cdc_msk_spark.operators import similarity as S
-    from flink_cdc_msk_spark.plans.round10_extras import (
-        _emb_with_planted_neardups,
-    )
-
-    corpus = _emb_with_planted_neardups(spark, "/root/testdata/sf0.001")
-    kw = dict(threshold=0.8, n_planes=10, n_tables=8, portable_dims=64)
-    a = sorted(
-        map(str, S.lsh_near_dup_pairs(corpus, **kw).collect())
-    )
-    b = sorted(
-        map(
-            str,
-            S.lsh_near_dup_pairs(
-                corpus, _emit_order="cos_first", **kw
-            ).collect(),
-        )
-    )
-    assert a == b
-    assert len(a) > 0
-
-
 # ---------------------------------------------------------------------------
 # Video near-dup: frame-majority verify + exactly-once emission
 # ---------------------------------------------------------------------------
@@ -430,38 +404,26 @@ def test_url_dedup_group_election(spark):
 
 
 # ---------------------------------------------------------------------------
-# LSH bucketing form: auto resolves to the fold (r12 third session)
+# LSH bucketing projection is the fold (r12 third session)
 # ---------------------------------------------------------------------------
 
 
-def test_lsh_bucketing_auto_is_fold_and_forms_identical(spark):
-    """``form="auto"`` must resolve the portable bucketing projection to
-    the compact HOF fold: the 32-projection × 64-term unrolled-cast
-    Project exceeds janino's 64 KB method limit in batch (failed compile
-    + interpreted fallback — measured 1.75–1.92 s vs the fold's
-    0.45–0.51 s warm at sf0.1), so auto must never pick it. Pins (a) the
-    plan shape — auto's projection is the fold (``aggregate(zip_with``)
-    with no unrolled element casts; ``form="unrolled"`` still builds the
-    chain for A/B — and (b) bit-identical bucket relations across forms."""
+def test_lsh_bucketing_projection_is_fold(spark):
+    """The portable bucketing projection must be the compact HOF fold:
+    a 32-projection × 64-term unrolled element_at chain exceeds
+    janino's 64 KB method limit in batch (failed compile + interpreted
+    fallback — measured 1.75–1.92 s vs the fold's 0.45–0.51 s warm at
+    sf0.1). Pins the plan shape: ``aggregate(zip_with`` with no
+    unrolled element reads."""
     from flink_cdc_msk_spark.operators.similarity import (
         random_hyperplane_buckets,
     )
     from flink_cdc_msk_spark.plans.llm_pipeline import _emb
 
     corpus = _emb(spark, "/root/testdata/sf0.001")
-    kw = dict(n_planes=4, n_tables=8, portable_dims=64, wide=True)
-    auto = random_hyperplane_buckets(corpus, form="auto", **kw)
-    plan_auto = auto._jdf.queryExecution().analyzed().toString()
-    assert "aggregate(zip_with" in plan_auto
-    # the unrolled chain references element_at once per (projection,
-    # dim) — hundreds of times; the fold never does
-    assert plan_auto.count("element_at") == 0
-
-    unrolled = random_hyperplane_buckets(corpus, form="unrolled", **kw)
-    plan_unrolled = unrolled._jdf.queryExecution().analyzed().toString()
-    assert plan_unrolled.count("element_at") >= 4 * 8 * 64
-
-    a = sorted(map(str, auto.collect()))
-    b = sorted(map(str, unrolled.collect()))
-    assert a == b
-    assert len(a) > 0
+    buckets = random_hyperplane_buckets(
+        corpus, n_planes=4, n_tables=8, portable_dims=64, wide=True
+    )
+    plan = buckets._jdf.queryExecution().analyzed().toString()
+    assert "aggregate(zip_with" in plan
+    assert plan.count("element_at") == 0

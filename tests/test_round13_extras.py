@@ -1,28 +1,52 @@
 """Round 13 (optimization round 2) pins: the LSH rework.
 
-The default lsh_near_dup_pairs path changed shape this round — Arrow
-bucketing (one vectorized numpy pass), localCheckpoint'ed entry
-relation, and a grouped-numpy in-bucket verify with Catalyst doing the
-exact round+threshold — so these tests pin (a) that every form still
-emits the IDENTICAL pair set, and (b) the default plan shape the
-OPTIMIZATION_r13.md evidence claims.
+lsh_near_dup_pairs is one pipeline — Arrow bucketing (one vectorized
+numpy pass) or the Catalyst fold when the hyperplanes are not portable,
+a localCheckpoint'ed entry relation, and a grouped-numpy in-bucket
+verify with Catalyst doing the exact round+threshold. These tests pin
+(a) that it emits exactly the exact pair scan restricted to
+bucket-collision candidates — the DuckDB oracle's definition — on the
+edges (hot buckets at chunk boundaries, zero-norm vectors, int ids),
+and (b) the default plan shapes the OPTIMIZATION_r13.md evidence
+claims.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from flink_cdc_msk_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.01"
 
-LEGACY = dict(
-    _entries_form="join", _salt_form="blanket", _verify_form="smj"
-)
-
 
 def _rows(df):
     return sorted((r.id1, r.id2, r.cos) for r in df.collect())
+
+
+def _reference(emb, threshold, n_planes, n_tables, portable_dims=None):
+    """The exact pair scan joined with the bucket-collision candidates
+    (a self-join of the plain bucket relation on (table, bucket),
+    id1 < id2, distinct); zero-norm vectors excluded — they pair with
+    nothing."""
+    nonzero = emb.filter(S.norm(S.as_double("embedding")) > 0)
+    exact = S.near_dup_pairs_catalyst(nonzero, threshold)
+    b = S.random_hyperplane_buckets(
+        emb, n_planes, n_tables, portable_dims=portable_dims
+    )
+    cands = (
+        b.alias("a")
+        .join(
+            b.alias("b"),
+            (F.col("a.table") == F.col("b.table"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+        .distinct()
+    )
+    return _rows(exact.join(cands, ["id1", "id2"]))
 
 
 def _planted_bucket(spark, n: int, descending: bool):
@@ -48,11 +72,28 @@ def _emb(spark, planted: bool = False):
     return load_tables(spark, SF)["embeddings"]
 
 
+def _with_zero_vectors(emb):
+    """Three planted zero vectors: they share bucket 0 in every table,
+    so the verify meets 0/0 on every pair that touches one."""
+    emb = emb.select("vec_id", "embedding")
+    zeros = emb.sparkSession.createDataFrame(
+        [(10_000 + i, [0.0] * 64) for i in range(3)], emb.schema
+    )
+    return emb.unionByName(zeros)
+
+
+def _with_int_ids(emb):
+    return emb.select(F.col("vec_id").cast("int"), "embedding")
+
+
+DENSE = dict(threshold=0.3, n_planes=4, n_tables=8)
+
+
 @pytest.mark.parametrize(
     "kw",
     [
         # the dense registered regime (embedding_near_dup_lsh)
-        dict(threshold=0.3, n_planes=4, n_tables=8, portable_dims=64),
+        dict(DENSE, portable_dims=64),
         # the hi registered regime (embedding_near_dup_lsh_hi's params;
         # needs the planted-clone corpus for a non-empty survivor set)
         dict(
@@ -60,12 +101,11 @@ def _emb(spark, planted: bool = False):
             n_planes=10,
             n_tables=8,
             portable_dims=64,
-            _emit_order="cos_first",
             _planted=True,
         ),
         # non-portable (xxhash hyperplanes): arrow unavailable → the
-        # auto entries form is the hoisted Catalyst fold
-        dict(threshold=0.3, n_planes=4, n_tables=8),
+        # entries come from the Catalyst fold
+        dict(DENSE),
         # one hot bucket whose size is one past a verify chunk multiple,
         # smallest id last (the chunk-boundary case of the blas verify)
         dict(
@@ -76,36 +116,33 @@ def _emb(spark, planted: bool = False):
             threshold=0.8, n_planes=4, n_tables=8, portable_dims=64,
             _planted_bucket=(513, True),
         ),
+        # zero-norm vectors pair with nothing; int ids behave as long
+        pytest.param(
+            dict(DENSE, portable_dims=64, _corpus=_with_zero_vectors),
+            id="zero_norm-portable",
+        ),
+        pytest.param(
+            dict(DENSE, _corpus=_with_zero_vectors), id="zero_norm-fold"
+        ),
+        pytest.param(
+            dict(DENSE, portable_dims=64, _corpus=_with_int_ids),
+            id="int_ids-portable",
+        ),
+        pytest.param(dict(DENSE, _corpus=_with_int_ids), id="int_ids-fold"),
     ],
 )
 def test_lsh_forms_emit_identical_pairs(spark, kw):
     kw = dict(kw)
     bucket = kw.pop("_planted_bucket", None)
-    emb = (
+    corpus = kw.pop("_corpus", lambda emb: emb)
+    emb = corpus(
         _planted_bucket(spark, *bucket)
         if bucket
         else _emb(spark, planted=kw.pop("_planted", False))
     )
-    legacy = _rows(S.lsh_near_dup_pairs(emb, **kw, **LEGACY))
-    assert legacy  # non-degenerate corpus
-    assert _rows(S.lsh_near_dup_pairs(emb, **kw)) == legacy
-    assert (
-        _rows(S.lsh_near_dup_pairs(emb, _entries_form="fold", **kw))
-        == legacy
-    )
-    # adaptive salt on the legacy SMJ verify path
-    assert (
-        _rows(
-            S.lsh_near_dup_pairs(
-                emb,
-                _entries_form="fold",
-                _salt_form="adaptive",
-                _verify_form="smj",
-                **kw,
-            )
-        )
-        == legacy
-    )
+    ref = _reference(emb, **kw)
+    assert ref  # non-degenerate corpus
+    assert _rows(S.lsh_near_dup_pairs(emb, **kw)) == ref
 
 
 @pytest.mark.parametrize("n", [257, 513])
@@ -138,6 +175,20 @@ def test_lsh_default_plan_shape(spark):
     assert "ExistingRDD" in plan or "LogicalRDD" in plan  # checkpoint
     # the bucketing MapInArrow ran at construction (eager checkpoint);
     # the executed plan reads its materialization, not the subtree
+    assert plan.count("Exchange") == 1
+
+
+def test_lsh_fold_default_plan_shape(spark):
+    """Without ``portable_dims`` the entries come from the Catalyst fold
+    and feed the same verify: one MapInArrow, one exchange on (table,
+    bucket), no SortMergeJoin."""
+    df = S.lsh_near_dup_pairs(
+        _emb(spark), threshold=0.3, n_planes=4, n_tables=8
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1  # the verify stage
+    assert "SortMergeJoin" not in plan
+    assert "ExistingRDD" in plan or "LogicalRDD" in plan  # checkpoint
     assert plan.count("Exchange") == 1
 
 

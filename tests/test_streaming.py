@@ -603,6 +603,33 @@ def test_vector_near_dup_retry_is_idempotent(spark, tmpdir):
     ).count()
 
 
+def test_vector_near_dup_admits_zero_vectors(spark, tmpdir):
+    """Zero vectors share bucket 0 in every table, so the verify meets
+    0/0 both inside a batch and against the store; they pair with
+    nothing (as in the batch operator and the oracle), so every one is
+    admitted and the batch must not fail."""
+    from flink_cdc_msk_spark.streaming.dedup_stream import (
+        StreamingVectorNearDupFilter,
+    )
+
+    zero = [0.0] * 64
+    filt = StreamingVectorNearDupFilter(
+        f"{tmpdir}/z_store", f"{tmpdir}/z_out", threshold=0.9, dims=64
+    )
+    schema = "vec_id long, embedding array<double>"
+    filt(
+        spark.createDataFrame(
+            [(1, zero), (2, zero), (3, [1.0] + [0.0] * 63)], schema
+        ),
+        batch_id=0,
+    )
+    filt(spark.createDataFrame([(4, zero)], schema), batch_id=1)
+    admitted = sorted(
+        r.vec_id for r in spark.read.parquet(f"{tmpdir}/z_out").collect()
+    )
+    assert admitted == [1, 2, 3, 4]
+
+
 def test_backfill_migrates_presidecar_store(spark, tmpdir):
     """A round-4 PRE-SIDECAR store (band rows only, no unit-set state)
     must (a) fail fast under the new unified-layout code, and (b) resume

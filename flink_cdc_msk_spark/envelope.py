@@ -2,10 +2,12 @@
 
 The reference moves raw Debezium/Mongo JSON strings end-to-end
 (DataStreamSource[String], MySQLCDC2AWSMSK.scala:93). Here the payload gets a
-declared nested StructType so Catalyst can prune/push down; ``before``/
-``after`` stay ``map<string,string>`` because the reference treats row fields
-opaquely-stringly (``getAsString``) and must work for any table without a
-per-table schema.
+declared nested StructType so Catalyst can prune/push down. The
+table-agnostic full and compaction envelopes keep ``before``/``after`` as
+``map<string,string>``: the reference reads row fields opaquely-stringly
+(``getAsString``) and must work for any table without a per-table schema.
+Routing knows its rules, so its envelope reads only the rules' primary-key
+columns, as string struct fields (:func:`mysql_envelope_route_schema`).
 """
 
 from __future__ import annotations
@@ -62,24 +64,33 @@ MYSQL_ENVELOPE_SCHEMA = StructType(
 # compaction path): Catalyst's OptimizeJsonExprs does NOT prune nested
 # from_json schemas in these access shapes (verified in the optimized
 # plan), so the pruning is explicit.
-#
-# Routing (A13-A18) consumes: source.db, source.table, op, before/after.
-MYSQL_ENVELOPE_ROUTE_SCHEMA = StructType(
-    [
-        StructField("before", MapType(StringType(), StringType())),
-        StructField("after", MapType(StringType(), StringType())),
-        StructField(
-            "source",
-            StructType(
-                [
-                    StructField("db", StringType()),
-                    StructField("table", StringType()),
-                ]
-            ),
-        ),
-        StructField("op", StringType()),
-    ]
-)
+
+
+def mysql_envelope_route_schema(key_columns) -> StructType:
+    """Routing's envelope (A13-A18): source.db, source.table, op, and
+    before/after as a struct of ``key_columns`` (the union of the rules'
+    primary-key columns), each ``StringType``.
+
+    Jackson skips every other row field instead of building two maps per
+    row. A struct field and a map value share Spark's JSON ``StringType``
+    converter (a number, boolean or nested value becomes its JSON text),
+    so each key column reads the string a ``map<string,string>`` parse
+    would. The one difference is a key repeated inside one image: the
+    struct keeps the last value, as the reference's Gson does; a map keeps
+    the first."""
+    row = StructType([StructField(c, StringType()) for c in key_columns])
+    source = StructType(
+        [StructField("db", StringType()), StructField("table", StringType())]
+    )
+    return StructType(
+        [
+            StructField("before", row),
+            StructField("after", row),
+            StructField("source", source),
+            StructField("op", StringType()),
+        ]
+    )
+
 
 # Compaction consumes: before/after, op, ts_ms.
 MYSQL_ENVELOPE_COMPACT_SCHEMA = StructType(
@@ -101,8 +112,7 @@ def mysql_envelope_keyed_schema(
     structs instead of string maps. from_json skips JSON fields absent
     from the schema, so this parses ~10% faster than the map form
     (measured at sf0.1) while producing identical values. The map-based
-    schemas above remain the table-AGNOSTIC surface (routing must work
-    for any table without per-table schemas)."""
+    schemas above remain the table-AGNOSTIC surface."""
     before = StructType([StructField(k, t()) for k, t in key_fields.items()])
     after = StructType(
         [StructField(k, t()) for k, t in {**key_fields, **payload_fields}.items()]

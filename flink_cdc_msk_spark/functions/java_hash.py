@@ -7,14 +7,13 @@ The reference's Kafka partitioner is
 Kafka's own murmur2 keying; this expression exists for *partition-number
 parity* with the reference.
 
-Implemented with ``aggregate`` over the character array — stays JVM-side
-inside whole-stage codegen, no Python round-trip. Arithmetic is done in
-LongType with an explicit wrap to int32 each step because Spark 4 runs in
-ANSI mode (integer overflow would raise, while Java wraps silently).
-
-Caveat (documented): ``ascii()`` yields the Unicode code point, which equals
-the UTF-16 code unit only inside the BMP; partition keys are
-``db.table.pk…`` strings, ASCII in every reference example.
+Implemented with ``aggregate`` over the character array — stays JVM-side,
+no Python round-trip. ``split(s, '')`` yields code points, so a character
+outside the Basic Multilingual Plane folds in as its two UTF-16 units
+(``h = 961*h + 31*high + low``), exactly as Java iterates the string. The
+accumulator is the hash as an unsigned 32-bit value in a LongType, masked
+each step (Spark 4 runs in ANSI mode: integer overflow would raise, while
+Java wraps silently), and read back as a signed int32 once at the end.
 """
 
 from __future__ import annotations
@@ -24,17 +23,35 @@ from pyspark.sql import functions as F
 
 _TWO_31 = 2**31
 _TWO_32 = 2**32
+_MASK_32 = _TWO_32 - 1
 
 
 def java_string_hashcode(col: Column | str) -> Column:
-    """``h = 31*h + c`` over chars, int32 wraparound, as LongType column."""
+    """``h = 31*h + c`` over UTF-16 units, int32 wraparound, as LongType."""
     col = F.col(col) if isinstance(col, str) else col
-    chars = F.filter(F.split(col, ""), lambda c: c != F.lit(""))
-    step = lambda acc, c: (  # noqa: E731
-        F.pmod(acc * F.lit(31) + F.ascii(c) + F.lit(_TWO_31), F.lit(_TWO_32))
-        - F.lit(_TWO_31)
-    )
-    return F.aggregate(chars, F.lit(0).cast("long"), step)
+    # one string per code point; "" splits to [""], whose ascii() is 0,
+    # so the empty string folds to 0 like Java's
+    chars = F.split(col, "")
+
+    def step(acc: Column, c: Column) -> Column:
+        cp = F.ascii(c)
+        # a code point above the BMP is the one 4-byte UTF-8 sequence; its
+        # units are high = 0xD800 + (u >> 10), low = 0xDC00 + (u & 0x3FF)
+        # for u = cp - 0x10000, folded as 31*(31*acc + high) + low
+        u = cp - F.lit(0x10000)
+        pair = (
+            acc * F.lit(961)
+            + F.lit(31) * (F.shiftright(u, 10) + F.lit(0xD800))
+            + u.bitwiseAND(F.lit(0x3FF))
+            + F.lit(0xDC00)
+        )
+        h = F.when(F.octet_length(c) < F.lit(4), acc * F.lit(31) + cp)
+        return h.otherwise(pair).bitwiseAND(F.lit(_MASK_32))
+
+    def signed(acc: Column) -> Column:
+        return acc.bitwiseXOR(F.lit(_TWO_31)) - F.lit(_TWO_31)
+
+    return F.aggregate(chars, F.lit(0).cast("long"), step, signed)
 
 
 def java_partition(key: Column | str, num_partitions: int) -> Column:

@@ -5,7 +5,9 @@ Reference: the per-record ``map`` closure at MySQLCDC2AWSMSK.scala:95-168
 MongoCDC2AWSMSK.scala:79-102). Re-expressed as a composition of narrow
 Catalyst expressions:
 
-  * JSON field extraction  → ``from_json`` + struct access (A14)
+  * JSON field extraction  → ``from_json`` + struct access (A14); by
+    default ``before``/``after`` parse as a struct of only the rules'
+    primary-key columns, all strings, so Jackson skips the rest of the row
   * longest-match regex config lookup → generated ``coalesce(when(rlike))``
     chain in longest-key-first config order (A15)
   * delete-aware composite PK extraction → ``when(op='d', before[k])
@@ -38,12 +40,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import TableRouting
 from ..envelope import (
     MONGO_ENVELOPE_SCHEMA,
-    MYSQL_ENVELOPE_ROUTE_SCHEMA,
     MYSQL_ENVELOPE_SCHEMA,
+    mysql_envelope_route_schema,
 )
 from ..functions.java_hash import java_partition
 
@@ -61,14 +64,6 @@ def _first_match_chain(
         F.when(probe.rlike(rule.key), value_of(rule)) for rule in routing.rules
     ]
     return F.coalesce(*whens) if whens else None
-
-
-def _pk_value(rule, pk_side: Column) -> Column:
-    """mkString(".") over the rule's PK columns read from the delete-aware
-    side (scala:113-121,141). ``try_element_at`` → null for a missing column
-    (the reference would throw; we degrade to dropping it from the key)."""
-    vals = [F.try_element_at(pk_side, F.lit(c)) for c in rule.primary_key]
-    return F.concat_ws(".", *vals)
 
 
 def _make_trunc_udf(routing: TableRouting, always: bool):
@@ -270,8 +265,6 @@ def route_mysql_cdc(
         # JVM fast path: ONE full-schema parse per row serves routing AND
         # re-serialization (the pandas path's pruned parse would be a
         # second Jackson pass over every byte)
-        from pyspark.sql.types import StructType
-
         full_schema = StructType(
             [
                 f if f.name not in ("before", "after")
@@ -294,10 +287,9 @@ def route_mysql_cdc(
         ).otherwise(F.col("_fullenv.after"))
 
         def pk_value(rule, side):
-            # struct access (typed payload) instead of the map lookup;
             # a PK column outside the declared schema degrades to null
-            # (dropped from the key) — same as try_element_at on the
-            # pandas path for a column missing from the row
+            # (dropped from the key) — same as on the default path for a
+            # column missing from the row
             vals = [
                 side[c].cast("string")
                 if c in declared
@@ -306,10 +298,15 @@ def route_mysql_cdc(
             ]
             return F.concat_ws(".", *vals)
     else:
-        # pruned schema: parses only the fields routing consumes
-        # (envelope.py note — Catalyst doesn't auto-prune nested
-        # from_json here)
-        env = F.from_json(F.col(value_col), MYSQL_ENVELOPE_ROUTE_SCHEMA)
+        # before/after parse only the rules' key columns, as strings
+        # (envelope.mysql_envelope_route_schema); Catalyst doesn't prune
+        # a nested from_json schema here by itself
+        key_columns = list(
+            dict.fromkeys(c for rule in routing.rules for c in rule.primary_key)
+        )
+        env = F.from_json(
+            F.col(value_col), mysql_envelope_route_schema(key_columns)
+        )
         df = df.withColumn("_env", env).withColumns(
             {
                 "db": F.col("_env.source.db"),
@@ -320,7 +317,22 @@ def route_mysql_cdc(
         pk_side = F.when(
             F.col("op") == "d", F.col("_env.before")
         ).otherwise(F.col("_env.after"))
-        pk_value = _pk_value
+        # A struct field name resolves case-insensitively by default, so
+        # "ID" and "id" from two rules would be ambiguous: rename the
+        # fields by position (a struct-to-struct cast) and read each key
+        # column from its own slot.
+        slot = {c: c for c in key_columns}
+        if len({c.lower() for c in key_columns}) < len(key_columns):
+            slot = {c: f"_{i}" for i, c in enumerate(key_columns)}
+            pk_side = pk_side.cast(
+                StructType([StructField(n, StringType()) for n in slot.values()])
+            )
+
+        def pk_value(rule, side):
+            # mkString(".") over the rule's PK columns (scala:113-121,141);
+            # a column missing from the row is null and drops out of the
+            # key (the reference would throw)
+            return F.concat_ws(".", *[side[slot[c]] for c in rule.primary_key])
 
     probe = F.concat(F.col("db"), F.lit("="), F.col("table"))
     no_pk = F.concat_ws(".", F.col("db"), F.col("table"), F.lit("no_pk"))

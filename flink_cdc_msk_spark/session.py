@@ -72,6 +72,17 @@ def get_spark(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(1 << 30),
         )
+        # Without the native Hadoop library (pip's PySpark ships none)
+        # the local file system forks `readlink` for every link probe in
+        # FileContext.rename, about 26 processes per micro-batch on the
+        # offset, commit and source-log writes. FileSystem.rename makes
+        # no such call; each log entry is still written to a temp file and
+        # renamed into place atomically (rename(2)), checksums included.
+        b = b.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     if rocksdb_state:
         # Parity with the reference's RocksDB state backend
         # (emr/MySQLCDC2AWSMSK.scala:59): spill-aware streaming state for

@@ -39,7 +39,7 @@ def stream_lines_from_directory(
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path).withColumnRenamed("value", "value")
+    return reader.load(path)
 
 
 def route_stream_from_directory(

@@ -252,6 +252,12 @@ def test_java_hashcode_matches_python_reference(spark):
         "Ab",  # collides with "BC" in Java — good wraparound probe
         "polygenelubricants",  # famous negative hashCode
         "x" * 50,
+        "naïve.日本語",  # 2- and 3-byte UTF-8, still one UTF-16 unit each
+        # outside the BMP: Java folds each as two UTF-16 surrogate units
+        "emoji😀x",
+        "😀",
+        "a😀😀b",
+        "db.t.\U0010ffff",
     ]
     df = spark.createDataFrame([(s,) for s in samples], "s string")
     got = {
@@ -268,6 +274,105 @@ def test_java_hashcode_matches_python_reference(spark):
     # known Java values
     assert java_string_hashcode_py("polygenelubricants") == -2147483648
     assert got["polygenelubricants"][1] == 4  # pmod(-2^31, 12), bug-fixed edge
+    # "😀" is the units 0xD83D 0xDE00: 0xD83D * 31 + 0xDE00
+    assert got["😀"][0] == 1772899
+    assert got["emoji😀x"][1] == 7
+
+
+# ---- key-column parse: edge cases of the before/after images ----
+
+KEY_ROUTING = TableRouting.parse(
+    json.dumps(
+        [
+            {"db": "shop", "table": "orders", "primary_key": "id"},
+            {"db": "shop", "table": "lines", "primary_key": "order_id,line_no"},
+            # "ID" and "id" from two rules must not clash
+            {"db": "shop", "table": "users", "primary_key": "ID"},
+            {"db": "shop", "table": "audit"},
+        ]
+    )
+)
+
+
+def _image_line(table, op, before, after):
+    """A Debezium line with ``before``/``after`` spliced in as raw JSON
+    text, so an image can repeat a key or be an array or a scalar."""
+    return (
+        '{"before":%s,"after":%s,"source":{"db":"shop","table":"%s"},"op":"%s"}'
+        % (before, after, table, op)
+    )
+
+
+# (case, line, partition_key, partition of 12). A key column reads as its
+# JSON text (numbers as Jackson renders them); a PK key repeated in one
+# image keeps its last value, as the reference's Gson parse does.
+KEY_PARSE_CASES = [
+    ("dup_pk_key", _image_line("orders", "c", "null", '{"id":1,"v":"x","id":2}'),
+     "shop.orders.2", 11),
+    ("dup_non_pk_key",
+     _image_line("orders", "u", '{"id":7}', '{"v":"a","id":7,"v":"b"}'),
+     "shop.orders.7", 6),
+    ("int_pk", _image_line("orders", "c", "null", '{"id":-42}'),
+     "shop.orders.-42", 6),
+    ("big_int_pk", _image_line("orders", "c", "null", '{"id":12345678901234567890}'),
+     "shop.orders.12345678901234567890", 3),
+    ("decimal_pk", _image_line("orders", "c", "null", '{"id":1.50}'),
+     "shop.orders.1.5", 5),
+    ("exponent_pk", _image_line("orders", "c", "null", '{"id":1e3}'),
+     "shop.orders.1000.0", 2),
+    ("nested_object_pk",
+     _image_line("orders", "c", "null", '{"id":{"a":1,"b":[1, 2]}}'),
+     'shop.orders.{"a":1,"b":[1,2]}', 8),
+    ("array_pk", _image_line("orders", "c", "null", '{"id":[3,"x"]}'),
+     'shop.orders.[3,"x"]', 8),
+    ("boolean_pk", _image_line("orders", "c", "null", '{"id":true}'),
+     "shop.orders.true", 3),
+    ("null_pk", _image_line("orders", "c", "null", '{"id":null}'),
+     "shop.orders.", 9),
+    ("escaped_string_pk", _image_line("orders", "c", "null", '{"id":"a\\"b.c"}'),
+     'shop.orders.a"b.c', 5),
+    ("composite_one_null",
+     _image_line("lines", "c", "null", '{"order_id":3,"line_no":null}'),
+     "shop.lines.3", 8),
+    ("composite_missing_one", _image_line("lines", "c", "null", '{"line_no":2}'),
+     "shop.lines.2", 7),
+    ("missing_pk_column", _image_line("orders", "c", "null", '{"v":1}'),
+     "shop.orders.", 9),
+    ("delete_reads_before", _image_line("orders", "d", '{"id":5}', "null"),
+     "shop.orders.5", 8),
+    ("array_before", _image_line("lines", "d", "[1,2]", "null"),
+     "shop.lines.", 11),
+    ("scalar_before", _image_line("orders", "d", "5", '{"id":6}'),
+     "shop.orders.", 9),
+    ("scalar_after", _image_line("orders", "c", "null", '"id"'),
+     "shop.orders.", 9),
+    ("case_variant_pks_upper",
+     _image_line("users", "c", "null", '{"id":"lower","ID":"U1"}'),
+     "shop.users.U1", 2),
+    ("case_variant_pks_lower",
+     _image_line("orders", "c", "null", '{"ID":"X","id":9}'),
+     "shop.orders.9", 4),
+    ("no_pk_rule", _image_line("audit", "c", "null", '{"id":1}'),
+     "shop.audit.no_pk", 6),
+    ("unmatched_table", _image_line("zzz", "c", "null", '{"id":1}'),
+     "shop.zzz.no_pk", 9),
+    ("malformed_line", "not json {", "no_pk", 1),
+]
+
+
+def test_key_column_parse_edge_cases(spark):
+    df = spark.createDataFrame(
+        [(line,) for _, line, _, _ in KEY_PARSE_CASES], "value string"
+    )
+    got = {
+        r.value: (r.partition_key, r.partition)
+        for r in route_mysql_cdc(
+            df, KEY_ROUTING, topic="t", num_partitions=12
+        ).collect()
+    }
+    for case, line, key, partition in KEY_PARSE_CASES:
+        assert got[line] == (key, partition), case
+        assert java_partition_py(key, 12) == partition, case
 
 
 # ------------------------- config / params (no Spark session needed)

@@ -931,6 +931,57 @@ def test_file_stream_batch_runs_no_listing_job(spark, tmpdir):
     assert list(tracker.getJobIdsForGroup(str(q.runId))) == []
 
 
+def test_checkpoint_restart_after_torn_log_write_is_exactly_once(
+    spark, tmpdir
+):
+    """Local masters write the checkpoint logs through FileSystem.rename
+    (no `readlink` forks). A crash mid-write leaves a temp file in
+    offsets/; the restarted query ignores it, and the file sink still
+    holds every row exactly once."""
+    import os
+    import uuid
+
+    from flink_cdc_msk_spark.streaming.pipeline import (
+        stream_lines_from_directory,
+    )
+
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpointFileManagerClass"
+    ).endswith(".FileSystemBasedCheckpointFileManager")
+    src, out, ckpt = f"{tmpdir}/src", f"{tmpdir}/out", f"{tmpdir}/ckpt"
+    os.makedirs(src)
+
+    def add_files(first):
+        for i in range(first, first + 2):
+            with open(f"{src}/part-{i}.txt", "w") as fh:
+                fh.writelines(f"file {i} row {j}\n" for j in range(5))
+
+    def drain():
+        q = (
+            stream_lines_from_directory(spark, src)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    add_files(0)
+    drain()
+    assert sorted(os.listdir(f"{ckpt}/offsets")) == [".0.crc", ".1.crc", "0", "1"]
+    with open(f"{ckpt}/offsets/.2.{uuid.uuid4()}.tmp", "w") as fh:
+        fh.write("v1\n{")  # torn: the rename into offsets/2 never ran
+    add_files(2)
+    drain()
+    rows = [r.value for r in spark.read.parquet(out).collect()]
+    assert len(rows) == 20
+    assert sorted(set(rows)) == sorted(
+        f"file {i} row {j}" for i in range(4) for j in range(5)
+    )
+
+
 # ---- ParquetUpsertSink: one newest-per-key window over state ∪ batch ----
 
 

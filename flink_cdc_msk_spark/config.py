@@ -82,19 +82,12 @@ class CDCParams:
     """
 
     broker_list: str = "localhost:9092"
-    topic: str = ""  # fixed topic when topic_prefix unset (scala:191-220)
-    topic_prefix: str = ""  # per-db fan-out: prefix + lower(db) (scala:8-12)
     table_pk: str = "[]"
-    delivery_guarantee: str = "exactly_once"  # or at_least_once (scala:187-190)
     kafka_properties: str = ""  # "k=v,k=v" producer passthrough (scala:179-186)
     position: str = "initial"  # initial|latest|file:pos|gtid:...|timestamp:ms
-    server_id: str = "5400-5500"
     server_time_zone: str = "Etc/GMT"
     chunk_size: int = 8096  # snapshot split size (scala:255-258)
-    checkpoint_dir: str = ""
-    checkpoint_interval: int = 60
     parallel: int = 4
-    num_partitions: int | None = None  # sink partition count for parity mode
 
     @property
     def routing(self) -> TableRouting:

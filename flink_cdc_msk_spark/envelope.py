@@ -3,7 +3,7 @@
 The reference moves raw Debezium/Mongo JSON strings end-to-end
 (DataStreamSource[String], MySQLCDC2AWSMSK.scala:93). Here the payload gets a
 declared nested StructType so Catalyst can prune/push down. The
-table-agnostic full and compaction envelopes keep ``before``/``after`` as
+table-agnostic compaction envelope keeps ``before``/``after`` as
 ``map<string,string>``: the reference reads row fields opaquely-stringly
 (``getAsString``) and must work for any table without a per-table schema.
 Routing knows its rules, so its envelope reads only the rules' primary-key
@@ -13,49 +13,11 @@ columns, as string struct fields (:func:`mysql_envelope_route_schema`).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    IntegerType,
     LongType,
     MapType,
     StringType,
     StructField,
     StructType,
-)
-
-# Debezium `source` block — fields per the sample documented at
-# MySQLCDC2AWSMSK.scala:91.
-MYSQL_SOURCE_SCHEMA = StructType(
-    [
-        StructField("version", StringType()),
-        StructField("connector", StringType()),
-        StructField("name", StringType()),
-        StructField("ts_ms", LongType()),
-        StructField("snapshot", StringType()),
-        StructField("db", StringType()),
-        StructField("sequence", StringType()),
-        StructField("table", StringType()),
-        StructField("server_id", LongType()),
-        StructField("gtid", StringType()),
-        StructField("file", StringType()),
-        StructField("pos", LongType()),
-        StructField("row", IntegerType()),
-        StructField("thread", StringType()),
-        StructField("query", StringType()),
-    ]
-)
-
-# Debezium envelope, schema block omitted (JsonDebeziumDeserializationSchema
-# (false), scala:273). before/after as opaque string maps — matches the
-# reference's getAsString access pattern (scala:113-121) and keeps the
-# pipeline table-agnostic. `op` ∈ {c,u,d,r} (scala:100).
-MYSQL_ENVELOPE_SCHEMA = StructType(
-    [
-        StructField("before", MapType(StringType(), StringType())),
-        StructField("after", MapType(StringType(), StringType())),
-        StructField("source", MYSQL_SOURCE_SCHEMA),
-        StructField("op", StringType()),
-        StructField("ts_ms", LongType()),
-        StructField("transaction", StringType()),
-    ]
 )
 
 # Hand-pruned envelope views for hot paths. from_json ignores JSON fields
@@ -112,7 +74,7 @@ def mysql_envelope_keyed_schema(
     structs instead of string maps. from_json skips JSON fields absent
     from the schema, so this parses ~10% faster than the map form
     (measured at sf0.1) while producing identical values. The map-based
-    schemas above remain the table-AGNOSTIC surface."""
+    compaction schema above remains the table-AGNOSTIC surface."""
     before = StructType([StructField(k, t()) for k, t in key_fields.items()])
     after = StructType(
         [StructField(k, t()) for k, t in {**key_fields, **payload_fields}.items()]

@@ -26,10 +26,10 @@ the same partition key.
 
 Fidelity note on re-serialization: the reference re-serializes EVERY MySQL
 event through Gson (compact JSON, nulls preserved — scala:38,142,165), which
-is a whitespace-level canonicalization. When no truncation applies we forward
-the original line unchanged (JSON-semantically identical, byte-identical for
-already-compact input); pass ``reserialize="always"`` for strict
-canonical-output parity (runs the Arrow UDF on every row).
+is a whitespace-level canonicalization. Here a line is re-serialized
+(Gson-canonical) exactly when it matches a rule with ``column_max_length``;
+every other line is forwarded unchanged (JSON-semantically identical,
+byte-identical for already-compact input).
 """
 
 from __future__ import annotations
@@ -43,11 +43,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import TableRouting
-from ..envelope import (
-    MONGO_ENVELOPE_SCHEMA,
-    MYSQL_ENVELOPE_SCHEMA,
-    mysql_envelope_route_schema,
-)
+from ..envelope import MONGO_ENVELOPE_SCHEMA, mysql_envelope_route_schema
 from ..functions.java_hash import java_partition
 
 # Reference regex for Mongo `_id` (scalar or nested object), scala:86.
@@ -66,163 +62,53 @@ def _first_match_chain(
     return F.coalesce(*whens) if whens else None
 
 
-def _make_trunc_udf(routing: TableRouting, always: bool):
-    """Arrow-batched JSON truncate+reserialize (A17+A20).
+def _make_trunc_udf():
+    """Arrow-batched JSON truncation (A17+A20).
 
     Given (line, op, cml) where ``cml`` is the matched rule's
-    ``col=N|col2=M`` string (empty ⇒ no truncation configured): parse the
-    envelope, and for each configured column present and non-null on the
-    delete-aware side with ``len(value) >= N`` (the reference's ``>=`` edge,
-    scala:135 — a string of exactly N chars is "truncated" to itself),
-    replace it with ``value[:N]``; re-serialize compact with nulls preserved
-    (Gson ``serializeNulls`` parity, scala:38).
+    ``col=N|col2=M`` string (empty ⇒ no truncation configured, the line
+    is forwarded as is): parse the envelope, and for each configured
+    column present and non-null on the delete-aware side with
+    ``len(value) >= N`` (the reference's ``>=`` edge, scala:135 — a
+    string of exactly N chars is "truncated" to itself), replace it with
+    ``value[:N]``; re-serialize compact with nulls preserved (Gson
+    ``serializeNulls`` parity, scala:38).
+
+    Spark's JSON reader routes some lines Python's ``json`` rejects:
+    single quotes (``allowSingleQuotes``), bytes after the closing
+    ``}``, a leading-zero number (parsed partially in PERMISSIVE mode),
+    nesting deeper than Python's recursion limit. Such a line is
+    forwarded unchanged, untruncated, like every other line the route
+    cannot parse (see :func:`_finish`), instead of failing the batch.
     """
 
     @pandas_udf("string")
-    def trunc_reserialize(
+    def truncate_json(
         line: pd.Series, op: pd.Series, cml: pd.Series
     ) -> pd.Series:
         out = []
         for ln, o, c in zip(line, op, cml):
-            if not c and not always:
-                out.append(ln)
-                continue
-            obj = json.loads(ln)
             if c:
-                side = "before" if o == "d" else "after"
-                target = obj.get(side)
-                if isinstance(target, dict):
-                    for pair in c.split("|"):
-                        col, n = pair.split("=")[0], int(pair.split("=")[1])
-                        v = target.get(col)
-                        if isinstance(v, str) and v != "" and len(v) >= n:
-                            target[col] = v[: int(n)]
-            out.append(json.dumps(obj, separators=(",", ":")))
+                try:
+                    ln = _truncated(ln, o, c)
+                except (ValueError, RecursionError):
+                    pass
+            out.append(ln)
         return pd.Series(out)
 
-    return trunc_reserialize
+    return truncate_json
 
 
-def _jvm_reserialize(
-    value_col: str,
-    routing: TableRouting,
-    probe: Column,
-    payload_schema,
-) -> Column:
-    """A17+A20 JVM fast path (VERDICT r8 item 6): for envelopes whose
-    row schema is DECLARED, truncation + canonical re-serialization is
-    ``from_json`` → ``withField`` surgery → ``to_json`` — whole-stage
-    codegen, no Python worker on the CDC hot path.
-
-    Byte-parity contract (what "declared" certifies, verified once per
-    topic by the golden tests): the producer emits payload fields in
-    the declared order (``to_json`` renders struct fields in schema
-    order), and nulls are preserved (``ignoreNullFields=false`` ==
-    Gson ``serializeNulls``, scala:38). One deliberate delta from the
-    pandas mode, toward Gson: non-ASCII is emitted raw UTF-8 (Python
-    ``json.dumps`` escapes it).
-
-    SCHEMA-DRIFT WARNING (ADVICE r9): the from_json → to_json
-    round-trip DROPS every payload/envelope field absent from the
-    declared schema — on a drifted topic this path loses those columns
-    on EVERY row, not merely "cannot truncate" them (the pandas mode
-    forwards the full parsed JSON and is the correct mode for drifting
-    topics). Run :func:`payload_schema_drift` against a sample of the
-    topic before declaring a schema, and re-run it on schema-change
-    events; the golden tests pin the drop behavior."""
-    # env is an ATTRIBUTE (bound by route_mysql_cdc via withColumn), not
-    # the from_json expression itself: the coalesce(when(...)) chain
-    # references the envelope many times, and inlining the parse there
-    # re-evaluates from_json per reference (conditional branches defeat
-    # codegen subexpression elimination — measured 3.6× SLOWER than the
-    # pandas mode before this binding; Catalyst's CollapseProject keeps
-    # the projections separate exactly because the expensive expression
-    # is multiply-referenced, so the parse runs once per row).
-    env = F.col("_fullenv")
-    declared = {f.name for f in payload_schema.fields}
-
-    def truncated(side: Column, rule) -> Column:
-        out = side
-        for col, n in rule.column_max_length:
-            if col not in declared:
-                continue
-            v = out[col]
-            out = out.withField(
-                col,
-                F.when(
-                    v.isNotNull() & (v != "") & (F.length(v) >= n),
-                    F.substring(v, 1, n),
-                ).otherwise(v),
-            )
-        return F.when(side.isNotNull(), out)  # null side stays null
-
-    def per_rule(rule) -> Column:
-        if not rule.column_max_length:
-            return env
-        is_del = env["op"] == "d"
-        return (
-            env.withField(
-                "before",
-                F.when(is_del, truncated(env["before"], rule)).otherwise(
-                    env["before"]
-                ),
-            ).withField(
-                "after",
-                F.when(is_del, env["after"]).otherwise(
-                    truncated(env["after"], rule)
-                ),
-            )
-        )
-
-    chain = [
-        F.when(probe.rlike(rule.key), per_rule(rule))
-        for rule in routing.rules
-    ]
-    routed_env = F.coalesce(*chain, env) if chain else env
-    # malformed lines are forwarded raw, matching the pandas mode: the
-    # A21 quarantine keys off null db/table and must still see the
-    # original bytes. PERMISSIVE from_json yields an all-null struct
-    # (not a null) for garbage, so the detector is the required
-    # `source` block — an envelope without it is unroutable either way.
-    return F.when(
-        env.isNull() | env["source"].isNull(), F.col(value_col)
-    ).otherwise(F.to_json(routed_env, {"ignoreNullFields": "false"}))
-
-
-def payload_schema_drift(
-    df: DataFrame, payload_schema, value_col: str = "value"
-) -> DataFrame:
-    """Drift guard for the JVM fast path (ADVICE r9): returns
-    ``(undeclared_column, n_rows)`` for every payload field that appears
-    in the topic's before/after images but is ABSENT from
-    ``payload_schema`` — exactly the fields :func:`_jvm_reserialize`
-    would silently drop. Empty result == the declared schema covers the
-    topic and the fast path is loss-free.
-
-    Run it on a bounded sample (``df.limit(n)``) as a pre-flight, or on
-    a whole batch as a loud gate (``assert drift.isEmpty()``). Payload
-    values are parsed as MAP<STRING,STRING>, so only top-level field
-    NAMES are inspected — sufficient for MySQL row images, which are
-    flat."""
-    declared = sorted(f.name for f in payload_schema.fields)
-    keys = F.from_json(
-        F.col(value_col),
-        "STRUCT<before: MAP<STRING,STRING>, after: MAP<STRING,STRING>>",
-    )
-    observed = F.array_distinct(
-        F.concat(
-            F.coalesce(F.map_keys(keys["before"]), F.array()),
-            F.coalesce(F.map_keys(keys["after"]), F.array()),
-        )
-    )
-    undeclared = F.array_except(
-        observed, F.array(*[F.lit(c) for c in declared])
-    )
-    return (
-        df.select(F.explode(undeclared).alias("undeclared_column"))
-        .groupBy("undeclared_column")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
+def _truncated(line: str, op: str, cml: str) -> str:
+    obj = json.loads(line)
+    target = obj.get("before" if op == "d" else "after")
+    if isinstance(target, dict):
+        for pair in cml.split("|"):
+            col, n = pair.split("=")[0], int(pair.split("=")[1])
+            v = target.get(col)
+            if isinstance(v, str) and v != "" and len(v) >= n:
+                target[col] = v[:n]
+    return json.dumps(obj, separators=(",", ":"))
 
 
 def route_mysql_cdc(
@@ -233,106 +119,49 @@ def route_mysql_cdc(
     topic: str = "",
     topic_prefix: str = "",
     num_partitions: int | None = None,
-    reserialize: str = "needed",  # "needed" | "always"
-    rebalance: int | None = None,
-    payload_schema=None,
 ) -> DataFrame:
     """Debezium JSON lines → routed CDC records.
 
     Output columns: ``db, table, partition_key, topic[, partition], value``
     — the ``CDCKafkaModel`` (model/CDCModel.scala:4) plus sink routing.
     Works identically on batch and streaming DataFrames (same expressions).
-
-    ``payload_schema`` (a StructType for the row fields in producer
-    order) selects the JVM re-serialization fast path — see
-    :func:`_jvm_reserialize`; without it, truncation runs in the
-    byte-parity Arrow pandas UDF.
-
-    CAUTION: the fast path re-emits only DECLARED fields — a stale
-    ``payload_schema`` on a drifted topic silently sheds the new
-    columns from every re-serialized row (ADVICE r9). Validate with
-    :func:`payload_schema_drift` before declaring, and leave
-    ``payload_schema=None`` (pandas byte-parity mode, which forwards
-    the full parsed JSON) for topics that drift.
     """
     # A21 null guard, on the raw line (see _finish)
     df = df.filter(F.col(value_col).isNotNull())
-    if rebalance:
-        # A12: `source.rebalance` (scala:95) — round-robin skew breaker.
-        df = df.repartition(rebalance)
 
-    if payload_schema is not None:
-        # JVM fast path: ONE full-schema parse per row serves routing AND
-        # re-serialization (the pandas path's pruned parse would be a
-        # second Jackson pass over every byte)
-        full_schema = StructType(
-            [
-                f if f.name not in ("before", "after")
-                else type(f)(f.name, payload_schema)
-                for f in MYSQL_ENVELOPE_SCHEMA.fields
-            ]
+    # before/after parse only the rules' key columns, as strings
+    # (envelope.mysql_envelope_route_schema); Catalyst doesn't prune
+    # a nested from_json schema here by itself
+    key_columns = list(
+        dict.fromkeys(c for rule in routing.rules for c in rule.primary_key)
+    )
+    env = F.from_json(F.col(value_col), mysql_envelope_route_schema(key_columns))
+    df = df.withColumn("_env", env).withColumns(
+        {
+            "db": F.col("_env.source.db"),
+            "table": F.col("_env.source.table"),
+            "op": F.col("_env.op"),
+        }
+    )
+    pk_side = F.when(F.col("op") == "d", F.col("_env.before")).otherwise(
+        F.col("_env.after")
+    )
+    # A struct field name resolves case-insensitively by default, so
+    # "ID" and "id" from two rules would be ambiguous: rename the
+    # fields by position (a struct-to-struct cast) and read each key
+    # column from its own slot.
+    slot = {c: c for c in key_columns}
+    if len({c.lower() for c in key_columns}) < len(key_columns):
+        slot = {c: f"_{i}" for i, c in enumerate(key_columns)}
+        pk_side = pk_side.cast(
+            StructType([StructField(n, StringType()) for n in slot.values()])
         )
-        declared = {f.name for f in payload_schema.fields}
-        df = df.withColumn(
-            "_fullenv", F.from_json(F.col(value_col), full_schema)
-        ).withColumns(
-            {
-                "db": F.col("_fullenv.source.db"),
-                "table": F.col("_fullenv.source.table"),
-                "op": F.col("_fullenv.op"),
-            }
-        )
-        pk_side = F.when(
-            F.col("op") == "d", F.col("_fullenv.before")
-        ).otherwise(F.col("_fullenv.after"))
 
-        def pk_value(rule, side):
-            # a PK column outside the declared schema degrades to null
-            # (dropped from the key) — same as on the default path for a
-            # column missing from the row
-            vals = [
-                side[c].cast("string")
-                if c in declared
-                else F.lit(None).cast("string")
-                for c in rule.primary_key
-            ]
-            return F.concat_ws(".", *vals)
-    else:
-        # before/after parse only the rules' key columns, as strings
-        # (envelope.mysql_envelope_route_schema); Catalyst doesn't prune
-        # a nested from_json schema here by itself
-        key_columns = list(
-            dict.fromkeys(c for rule in routing.rules for c in rule.primary_key)
-        )
-        env = F.from_json(
-            F.col(value_col), mysql_envelope_route_schema(key_columns)
-        )
-        df = df.withColumn("_env", env).withColumns(
-            {
-                "db": F.col("_env.source.db"),
-                "table": F.col("_env.source.table"),
-                "op": F.col("_env.op"),
-            }
-        )
-        pk_side = F.when(
-            F.col("op") == "d", F.col("_env.before")
-        ).otherwise(F.col("_env.after"))
-        # A struct field name resolves case-insensitively by default, so
-        # "ID" and "id" from two rules would be ambiguous: rename the
-        # fields by position (a struct-to-struct cast) and read each key
-        # column from its own slot.
-        slot = {c: c for c in key_columns}
-        if len({c.lower() for c in key_columns}) < len(key_columns):
-            slot = {c: f"_{i}" for i, c in enumerate(key_columns)}
-            pk_side = pk_side.cast(
-                StructType([StructField(n, StringType()) for n in slot.values()])
-            )
-
-        def pk_value(rule, side):
-            # mkString(".") over the rule's PK columns (scala:113-121,141);
-            # a column missing from the row is null and drops out of the
-            # key (the reference would throw)
-            return F.concat_ws(".", *[side[slot[c]] for c in rule.primary_key])
+    def pk_value(rule, side):
+        # mkString(".") over the rule's PK columns (scala:113-121,141);
+        # a column missing from the row is null and drops out of the
+        # key (the reference would throw)
+        return F.concat_ws(".", *[side[slot[c]] for c in rule.primary_key])
 
     probe = F.concat(F.col("db"), F.lit("="), F.col("table"))
     no_pk = F.concat_ws(".", F.col("db"), F.col("table"), F.lit("no_pk"))
@@ -350,23 +179,13 @@ def route_mysql_cdc(
     )
     partition_key = F.coalesce(key_chain, no_pk) if key_chain is not None else no_pk
 
-    needs_trunc = any(r.column_max_length for r in routing.rules)
-    if needs_trunc or reserialize == "always":
-        if payload_schema is not None:
-            value_out = _jvm_reserialize(
-                value_col, routing, probe, payload_schema
-            )
-        else:
-            cml_chain = _first_match_chain(
-                probe, routing, lambda rule: F.lit(rule.max_length_str)
-            )
-            cml = (
-                F.coalesce(cml_chain, F.lit(""))
-                if cml_chain is not None
-                else F.lit("")
-            )
-            udf = _make_trunc_udf(routing, always=reserialize == "always")
-            value_out = udf(F.col(value_col), F.col("op"), cml)
+    if any(r.column_max_length for r in routing.rules):
+        cml_chain = _first_match_chain(
+            probe, routing, lambda rule: F.lit(rule.max_length_str)
+        )
+        value_out = _make_trunc_udf()(
+            F.col(value_col), F.col("op"), F.coalesce(cml_chain, F.lit(""))
+        )
     else:
         # No truncation configured anywhere → the reference's gson
         # re-serialization is a pure canonicalization; forward unchanged
@@ -386,15 +205,12 @@ def route_mongo_cdc(
     topic: str = "",
     topic_prefix: str = "",
     num_partitions: int | None = None,
-    rebalance: int | None = None,
 ) -> DataFrame:
     """Mongo change-stream JSON lines → routed CDC records
     (MongoCDC2AWSMSK.scala:79-102). The raw line is forwarded untouched
     (scala:97,100 — no truncation, no re-serialization on the Mongo path)."""
     # A21 null guard, on the raw line (see _finish)
     df = df.filter(F.col(value_col).isNotNull())
-    if rebalance:
-        df = df.repartition(rebalance)
 
     env = F.from_json(F.col(value_col), MONGO_ENVELOPE_SCHEMA)
     df = df.withColumn("_env", env).withColumns(
@@ -445,16 +261,17 @@ def _finish(
     ) + ["value"]
     # A21: the reference's null guard (emr/MySQLCDC2AWSMSK.scala:160)
     # sits at the top of route_mysql_cdc / route_mongo_cdc, on the raw
-    # line, not here on ``value``. Every value form (the truncation UDF,
-    # the JVM re-serialization, the pass-through) is null exactly when
-    # the raw line is, so both drop the same rows. But a predicate on
-    # ``value`` is pushed below this projection with the whole value
-    # expression inlined (PushPredicateThroughProject): on the pandas
-    # truncation path that plans a second ArrowEvalPython, its inputs
-    # re-parsing the line with from_json, and the UDF runs twice per row.
-    # On the raw column it stays a plain filter over the scan.
+    # line, not here on ``value``. Both value forms (the truncation UDF
+    # and the pass-through) are null exactly when the raw line is, so
+    # both drop the same rows. But a predicate on ``value`` is pushed
+    # below this projection with the whole value expression inlined
+    # (PushPredicateThroughProject): on the truncation path that plans a
+    # second ArrowEvalPython, its inputs re-parsing the line with
+    # from_json, and the UDF runs twice per row. On the raw column it
+    # stays a plain filter over the scan.
     # Unroutable lines (no JSON, no source block) survive with null
     # db/table/topic: the reference's Gson parse would throw and fail the
     # job; here the caller quarantines or drops them (query
-    # cdc_route_malformed pins the drop).
+    # cdc_route_malformed pins the drop). A routable line the truncation
+    # UDF cannot parse is forwarded unchanged for the same reason.
     return df.withColumns(cols).select(*out_cols)

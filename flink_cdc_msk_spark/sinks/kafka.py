@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..config import CDCParams
 
 
-def to_kafka_columns(routed: DataFrame, with_partition: bool = True) -> DataFrame:
+def to_kafka_columns(routed: DataFrame) -> DataFrame:
     """Routed CDC records → the Kafka writer's column contract.
 
     key = partition_key bytes (CDCKafkaKeySerializationSchema.scala:8-10),
@@ -33,7 +33,7 @@ def to_kafka_columns(routed: DataFrame, with_partition: bool = True) -> DataFram
         F.col("value").cast("binary").alias("value"),
         F.col("topic"),
     ]
-    if with_partition and "partition" in routed.columns:
+    if "partition" in routed.columns:
         cols.append(F.col("partition"))
     return routed.select(*cols)
 

@@ -5,10 +5,9 @@ Each micro-batch of routed change events is merged into a materialized
 table: newest ``ts_ms`` per primary key wins, deletes remove the key —
 the streaming twin of plans/cdc_queries.cdc_latest_state.
 
-The local sink is a parquet directory rewritten per batch (fine for tests;
-the batch is the unit of atomicity). Each batch runs one newest-per-key
-window over the state plus the batch; with ``num_buckets`` set, only the
-state's touched pk-hash buckets are read, so the merge shuffle is
+The local sink is a parquet directory partitioned by pk-hash bucket (the
+batch is the unit of atomicity). Each batch runs one newest-per-key window
+over the state's touched buckets plus the batch, so the merge shuffle is
 proportional to those buckets and the batch, not the table. On a
 production lake the merge becomes a MERGE INTO against
 Delta/Iceberg/Hudi, which needs at most one source row per key: there
@@ -74,6 +73,13 @@ def read_parquet_or_none(spark, path: str, schema=None) -> DataFrame | None:
         raise
 
 
+def pk_bucket(pk_cols: list[str], num_buckets: int) -> F.Column:
+    """The state tables' partition column: ``pmod(xxhash64(pk), N)``."""
+    return F.pmod(
+        F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(num_buckets)
+    ).cast("int")
+
+
 def stage_and_swap_buckets(path: str, live: DataFrame, touched) -> None:
     """Stage ONLY the touched pk-hash buckets of a state table, then swap
     each bucket dir in: replaced buckets point at the staged write; a
@@ -99,19 +105,18 @@ def stage_and_swap_buckets(path: str, live: DataFrame, touched) -> None:
 class ParquetUpsertSink:
     """foreachBatch target: maintains a latest-state parquet table.
 
-    ``num_buckets=N`` partitions the state table by ``pmod(xxhash64(pk),
-    N)`` and each batch rewrites ONLY the buckets containing changed keys
-    (dynamic partition overwrite + partition-pruned read of the current
-    state). With B buckets and a batch touching k of them, merge I/O drops
-    from O(table) to O(table·k/B) — the property that keeps continuous
-    compaction affordable when the table is 1000× the batch. ``None``
-    keeps the simple full-rewrite (fine for small state)."""
+    The state table is partitioned by ``pmod(xxhash64(pk), num_buckets)``
+    and each batch rewrites ONLY the buckets containing changed keys
+    (partition-pruned read of the current state, staged bucket swap).
+    With B buckets and a batch touching k of them, merge I/O drops from
+    O(table) to O(table·k/B) — the property that keeps continuous
+    compaction affordable when the table is 1000× the batch."""
 
     def __init__(
         self,
         path: str,
         pk_cols: list[str],
-        num_buckets: int | None = None,
+        num_buckets: int = 8,
         transform=None,
         retain_tombstones: bool = False,
     ):
@@ -142,69 +147,29 @@ class ParquetUpsertSink:
         self.transform = transform
         self.retain_tombstones = retain_tombstones
 
-    def _bucket(self) -> F.Column:
-        return F.pmod(
-            F.xxhash64(*[F.col(c) for c in self.pk_cols]),
-            F.lit(self.num_buckets),
-        ).cast("int")
-
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        """One newest-per-key window over (state ∪ the batch's parsed
-        changes) ranks a key's changes in this batch and its stored row
-        together. The state is read with the changes' schema, so no
-        inference job runs."""
-        spark = batch.sparkSession
+        """One newest-per-key window over (touched state buckets ∪ the
+        batch's parsed changes) ranks a key's changes in this batch and
+        its stored row together. The state is read with the changes'
+        schema, so no inference job runs."""
         changes = parse_change_events(batch, self.pk_cols)
         if self.transform is not None:
             changes = self.transform(changes)
-        if self.num_buckets is None:
-            self._merge_full(spark, changes)
-        else:
-            self._merge_bucketed(spark, changes)
-
-    def _swap_in(self, stage: str) -> None:
-        """Atomically (rename-level) replace the table dir with the staged
-        write. The staged dir is fully committed before the old table is
-        touched, so readers never see a partial table — the parquet
-        stand-in for a MERGE commit. (Local-FS rename; on an object-store
-        lake this sink is replaced by Delta/Iceberg MERGE anyway.)"""
-        import os
-        import shutil
-
-        old = f"{self.path}__old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(stage, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    def _live(self, rows: DataFrame) -> DataFrame:
-        merged = latest_per_key(rows, self.pk_cols)
-        return (
-            merged
-            if self.retain_tombstones
-            else merged.filter(F.col("op") != "d")
+        changes = changes.withColumn(
+            "bucket", pk_bucket(self.pk_cols, self.num_buckets)
         )
-
-    def _merge_full(self, spark, changes: DataFrame) -> None:
-        current = read_parquet_or_none(spark, self.path, changes.schema)
-        live = self._live(
-            changes if current is None else current.unionByName(changes)
-        )
-        # stage to a NEW dir (the plan still reads the live table), then swap
-        stage = f"{self.path}__stage"
-        live.write.mode("overwrite").parquet(stage)
-        self._swap_in(stage)
-
-    def _merge_bucketed(self, spark, changes: DataFrame) -> None:
-        changes = changes.withColumn("bucket", self._bucket())
         touched = [r.bucket for r in changes.select("bucket").distinct().collect()]
-        current = read_parquet_or_none(spark, self.path, changes.schema)
+        current = read_parquet_or_none(
+            batch.sparkSession, self.path, changes.schema
+        )
         if current is not None:
             changes = current.filter(
                 F.col("bucket").isin(touched)  # partition-pruned read
             ).unionByName(changes)
-        stage_and_swap_buckets(self.path, self._live(changes), touched)
+        live = latest_per_key(changes, self.pk_cols)
+        if not self.retain_tombstones:
+            live = live.filter(F.col("op") != "d")
+        stage_and_swap_buckets(self.path, live, touched)
 
 
 class Scd2IntervalSink:
@@ -233,18 +198,12 @@ class Scd2IntervalSink:
         self.num_buckets = num_buckets
         self.batch_ids: list[int] = []
 
-    def _bucket(self) -> F.Column:
-        return F.pmod(
-            F.xxhash64(*[F.col(c) for c in self.pk_cols]),
-            F.lit(self.num_buckets),
-        ).cast("int")
-
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         self.batch_ids.append(batch_id)
         changes = (
             parse_change_events(batch, self.pk_cols)
-            .withColumn("bucket", self._bucket())
+            .withColumn("bucket", pk_bucket(self.pk_cols, self.num_buckets))
             .cache()
         )
         touched = [

@@ -155,7 +155,29 @@ def test_truncation_ge_boundary(spark):
         mysql_event(table="product_01", after={"pid": 2, "col1": "b" * 10}),
         mysql_event(table="product_01", after={"pid": 3, "col1": "c" * 11}),
     ]
-    out = {r.partition_key: json.loads(r.value) for r in route(spark, rows)}
+    # Lines Spark's JSON reader routes to the truncating rule but Python's
+    # json rejects: single quotes (allowSingleQuotes), bytes after the
+    # closing brace, a leading-zero number (partial PERMISSIVE parse),
+    # nesting past Python's recursion limit. Each is forwarded unchanged
+    # and untruncated instead of failing the batch.
+    head = '{"source":{"db":"test_db","table":"product_01"},"op":"c",'
+    poison = [
+        rows[2].replace('"', "'"),
+        rows[2] + " trailing",
+        head + '"after":{"pid":6,"col1":"' + "f" * 11 + '","n":007}}',
+        head + '"after":{"pid":7,"col1":"' + "g" * 11 + '","x":'
+        + "[" * 995 + "]" * 995 + "}}",
+    ]
+    routed = route(spark, rows + poison)
+    assert len(routed) == len(rows) + len(poison)
+    forwarded = [r for r in routed if r.value in poison]
+    assert sorted(r.value for r in forwarded) == sorted(poison)
+    assert all(r.table == "product_01" for r in forwarded)
+    out = {
+        r.partition_key: json.loads(r.value)
+        for r in routed
+        if r.value not in poison
+    }
     assert out["test_db.product_01.1"]["after"]["col1"] == "a" * 9
     assert out["test_db.product_01.2"]["after"]["col1"] == "b" * 10
     assert out["test_db.product_01.3"]["after"]["col1"] == "c" * 10
@@ -184,13 +206,6 @@ def test_fixed_topic_when_no_prefix(spark):
     row = mysql_event(after={"pid": 1})
     [r] = route(spark, [row], topic_prefix="", topic="fixed_topic")
     assert r.topic == "fixed_topic"
-
-
-def test_reserialize_always_canonicalizes(spark):
-    line = mysql_event(after={"pid": 1, "s": "x"})
-    spaced = line.replace(", ", ",  ")
-    [r] = route(spark, [spaced], reserialize="always")
-    assert r.value == json.dumps(json.loads(line), separators=(",", ":"))
 
 
 # ---- Mongo path (MongoCDC2AWSMSK.scala:79-102) ----
@@ -693,162 +708,6 @@ def test_debezium_jsonl_source_quarantines_malformed(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 2
 
 
-# ---- JVM re-serialization fast path (A17+A20, VERDICT r8 item 6) ----
-
-PAYLOAD_SCHEMA = None
-
-
-def _payload_schema():
-    global PAYLOAD_SCHEMA
-    if PAYLOAD_SCHEMA is None:
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        PAYLOAD_SCHEMA = StructType(
-            [
-                StructField("pid", LongType()),
-                StructField("col1", StringType()),
-                StructField("col2", StringType()),
-                StructField("n", LongType()),
-            ]
-        )
-    return PAYLOAD_SCHEMA
-
-
-def _event_declared(table, op="c", before=None, after=None):
-    """mysql_event with the payload emitted in DECLARED field order and
-    every declared field present — the certified-envelope contract the
-    JVM path requires for byte parity."""
-
-    def full(d):
-        if d is None:
-            return None
-        return {
-            "pid": d.get("pid"),
-            "col1": d.get("col1"),
-            "col2": d.get("col2"),
-            "n": d.get("n"),
-        }
-
-    return mysql_event(table=table, op=op, before=full(before), after=full(after))
-
-
-def _route_both(spark, lines, **kw):
-    """(pandas rows, jvm rows) for the same input."""
-    pd_rows = route(spark, lines, **kw)
-    jvm_rows = route(spark, lines, payload_schema=_payload_schema(), **kw)
-    return pd_rows, jvm_rows
-
-
-def test_jvm_mode_truncation_golden_parity(spark):
-    """Both modes byte-agree on the full truncation golden set: the >=
-    boundary, delete-side truncation, null preservation, numeric types."""
-    rows = [
-        _event_declared("product_01", after={"pid": 1, "col1": "a" * 9}),
-        _event_declared("product_01", after={"pid": 2, "col1": "b" * 10}),
-        _event_declared("product_01", after={"pid": 3, "col1": "c" * 11}),
-        _event_declared(
-            "product_01", op="d", before={"pid": 4, "col2": "z" * 25}
-        ),
-        _event_declared(
-            "product_01", after={"pid": 5, "col1": "x" * 12, "n": 3}
-        ),
-    ]
-    pd_rows, jvm_rows = _route_both(spark, rows)
-    pd_out = {r.partition_key: r for r in pd_rows}
-    jvm_out = {r.partition_key: r for r in jvm_rows}
-    assert set(pd_out) == set(jvm_out)
-    for k in pd_out:
-        assert pd_out[k].value == jvm_out[k].value, k
-    v = json.loads(jvm_out["test_db.product_01.3"].value)
-    assert v["after"]["col1"] == "c" * 10
-    v = json.loads(jvm_out["test_db.product_01.4"].value)
-    assert v["before"]["col2"] == "z" * 20
-    assert v["after"] is None
-    v = json.loads(jvm_out["test_db.product_01.5"].value)
-    assert v["after"]["n"] == 3
-    assert v["source"]["gtid"] is None
-
-
-def test_jvm_mode_untruncated_tables_canonical(spark):
-    """A matched rule WITHOUT column_max_length: the JVM path re-emits
-    the canonical (compact, nulls-preserved) envelope — byte-identical
-    to the pandas reserialize="always" Gson-parity mode, and to the
-    input itself when the producer already emits compact JSON in the
-    declared order."""
-    line = _event_declared("product", after={"pid": 1, "col1": "x"})
-    compact = json.dumps(json.loads(line), separators=(",", ":"))
-    [r] = route(spark, [line], payload_schema=_payload_schema())
-    assert r.value == compact
-    [r2] = route(spark, [compact], payload_schema=_payload_schema())
-    assert r2.value == compact
-    [rp] = route(spark, [line], reserialize="always")
-    assert rp.value == compact
-    assert r.partition_key == "test_db.product.1"
-
-
-def test_jvm_mode_malformed_line_forwarded_raw(spark):
-    """from_json -> null envelope must forward the original bytes so the
-    A21 quarantine still sees them (pandas-mode behavior)."""
-    bad = "not json at all"
-    [r] = route(spark, [bad], payload_schema=_payload_schema())
-    assert r.value == bad
-    assert r.db is None and r.table is None
-
-
-def test_jvm_mode_plan_has_no_python(spark):
-    """The point of the fast path: no Python worker in the plan."""
-    df = spark.createDataFrame(
-        [(_event_declared("product_01", after={"pid": 1, "col1": "y" * 30}),)],
-        "value string",
-    )
-    out = route_mysql_cdc(
-        df, ROUTING, topic_prefix="cdc_", num_partitions=12,
-        payload_schema=_payload_schema(),
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    pd_plan = route_mysql_cdc(
-        df, ROUTING, topic_prefix="cdc_", num_partitions=12
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in pd_plan
-
-
-def test_payload_schema_drift_guard(spark):
-    """ADVICE r9: the JVM fast path DROPS undeclared payload fields.
-    payload_schema_drift must surface exactly those fields (the loud
-    pre-flight), and this test pins the drop itself: the pandas mode
-    forwards the drifted column, the JVM mode sheds it."""
-    from flink_cdc_msk_spark.operators.route import payload_schema_drift
-
-    drifted = mysql_event(
-        table="product_01",
-        after={"pid": 1, "col1": "a" * 11, "new_col": "surprise"},
-    )
-    clean = _event_declared("product_01", after={"pid": 2, "col1": "b"})
-    df = spark.createDataFrame([(drifted,), (clean,)], "value string")
-
-    drift = payload_schema_drift(df, _payload_schema()).collect()
-    assert [(r.undeclared_column, r.n_rows) for r in drift] == [
-        ("new_col", 1)
-    ]
-    clean_df = spark.createDataFrame([(clean,)], "value string")
-    assert payload_schema_drift(clean_df, _payload_schema()).count() == 0
-
-    # the drop this guard exists to catch:
-    [pd_r] = route(spark, [drifted])
-    [jvm_r] = route(spark, [drifted], payload_schema=_payload_schema())
-    assert json.loads(pd_r.value)["after"]["new_col"] == "surprise"
-    assert "new_col" not in json.loads(jvm_r.value)["after"]
-    # both modes still truncate the declared column
-    assert json.loads(pd_r.value)["after"]["col1"] == "a" * 10
-    assert json.loads(jvm_r.value)["after"]["col1"] == "a" * 10
-
-
 # ---- A21 null guard on the raw line: plan shape and row semantics ----
 
 
@@ -874,19 +733,13 @@ _NO_TRUNC = TableRouting.parse(
 )
 
 
-@pytest.mark.parametrize(
-    "mode", ["pandas", "payload_schema", "no_truncation"]
-)
+@pytest.mark.parametrize("mode", ["pandas", "no_truncation"])
 def test_null_lines_dropped_malformed_survive(spark, mode):
-    """A21 semantics on every value path: a null line is dropped; an
+    """A21 semantics on both value paths: a null line is dropped; an
     unroutable line (not JSON, or JSON without a source block) survives
     with null db and its original bytes."""
-    kw = {
-        "pandas": {},
-        "payload_schema": {"payload_schema": _payload_schema()},
-        "no_truncation": {"routing": _NO_TRUNC},
-    }[mode]
-    good = _event_declared("product_01", after={"pid": 1, "col1": "q" * 12})
+    kw = {"pandas": {}, "no_truncation": {"routing": _NO_TRUNC}}[mode]
+    good = mysql_event(table="product_01", after={"pid": 1, "col1": "q" * 12})
     malformed = ["not json at all", '{"op":"c","ts_ms":1}']
     rows = route(spark, [good, None, *malformed], **kw)
     assert len(rows) == 3

@@ -269,7 +269,8 @@ def test_foreach_batch_compaction(spark, tmpdir):
 
 def test_bucketed_compaction_matches_full(spark, tmpdir):
     """Partition-aware upsert (rewrite only touched pk-hash buckets) must
-    produce exactly the same live state as the full-rewrite sink."""
+    produce exactly the same live state as one bucket holding the whole
+    table, fed the same events as a single batch."""
     events = synthesize_mysql_events(spark, SF_SMALL, with_updates=True)
     src = f"{tmpdir}/cdc_b"
     snapshot_then_stream_paths(events, src)
@@ -287,6 +288,18 @@ def test_bucketed_compaction_matches_full(spark, tmpdir):
     import os
 
     assert any(d.startswith("bucket=") for d in os.listdir(f"{tmpdir}/state_b"))
+
+    whole = ParquetUpsertSink(f"{tmpdir}/state_1", ["o_orderkey"], num_buckets=1)
+    whole(events, 0)
+
+    def rows(path):
+        return sorted(
+            spark.read.parquet(path)
+            .select("o_orderkey", "op", "ts_ms", F.to_json("payload"))
+            .collect()
+        )
+
+    assert rows(f"{tmpdir}/state_b") == rows(f"{tmpdir}/state_1")
 
 
 def test_bucketed_compaction_empties_fully_deleted_bucket(spark, tmpdir):
@@ -1031,7 +1044,7 @@ def _replay(batches, retain_tombstones):
 
 
 @pytest.mark.parametrize("retain_tombstones", [False, True])
-@pytest.mark.parametrize("num_buckets", [None, 8])
+@pytest.mark.parametrize("num_buckets", [1, 8])
 def test_upsert_merge_equals_replay(
     spark, tmpdir, num_buckets, retain_tombstones
 ):

@@ -365,6 +365,14 @@ _PROBE_POLL_S = 0.5
 _PROBE_MAX_WAIT_S = 600.0
 
 
+def _observation_ready(obs) -> bool:
+    """Non-blocking peek at whether ``obs``'s first action has delivered
+    its metrics: Scala ``Observation.getRowOrEmpty`` (package-private,
+    public in bytecode) returns ``Option[Row]`` (``getOrEmpty`` NPEs
+    before a value exists)."""
+    return not obs._jo.getRowOrEmpty().isEmpty()
+
+
 def _warn_on_degenerate_postings(posting: DataFrame) -> DataFrame:
     """Attach a LOG-ONLY degeneracy probe to an unguarded posting-list
     relation: an ``observe`` metric (max posting size) piggybacks on
@@ -391,26 +399,14 @@ def _warn_on_degenerate_postings(posting: DataFrame) -> DataFrame:
         global LAST_DEGENERACY_WARNING
         try:
             deadline = _time.monotonic() + _PROBE_MAX_WAIT_S
-            ready = False
-            while _time.monotonic() < deadline:
-                try:
-                    # Scala Observation.getRowOrEmpty (package-private →
-                    # public in bytecode) returns Option[Row]: a
-                    # non-blocking peek at whether the first action has
-                    # delivered metrics. (getOrEmpty NPEs pre-value.)
-                    if not obs._jo.getRowOrEmpty().isEmpty():
-                        ready = True
-                        break
-                except Exception:
-                    # peek unavailable (API drift / connect session):
-                    # degrade to the pre-r13 single blocking wait
-                    ready = True
-                    break
+            while not _observation_ready(obs):
+                if _time.monotonic() >= deadline:
+                    return  # plan never ran within the bound — give up
                 _time.sleep(_PROBE_POLL_S)
-            if not ready:
-                return  # plan never ran within the bound — give up
             metrics = obs.get
         except Exception:
+            # peek unavailable (API drift / connect session): give up
+            # rather than park on an unbounded obs.get
             return
         msg = _check_posting_metrics(metrics)
         if msg is not None:

@@ -34,7 +34,11 @@ byte-identical for already-compact input).
 
 from __future__ import annotations
 
+import functools
 import json
+import os
+import sys
+import zipimport
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -66,13 +70,13 @@ def _make_trunc_udf():
     """Arrow-batched JSON truncation (A17+A20).
 
     Given (line, op, cml) where ``cml`` is the matched rule's
-    ``col=N|col2=M`` string (empty ⇒ no truncation configured, the line
-    is forwarded as is): parse the envelope, and for each configured
+    ``col=N|col2=M`` string: parse the envelope, and for each configured
     column present and non-null on the delete-aware side with
     ``len(value) >= N`` (the reference's ``>=`` edge, scala:135 — a
     string of exactly N chars is "truncated" to itself), replace it with
     ``value[:N]``; re-serialize compact with nulls preserved (Gson
-    ``serializeNulls`` parity, scala:38).
+    ``serializeNulls`` parity, scala:38). A null line (one the caller
+    forwards raw) stays null.
 
     Spark's JSON reader routes some lines Python's ``json`` rejects:
     single quotes (``allowSingleQuotes``), bytes after the closing
@@ -86,9 +90,10 @@ def _make_trunc_udf():
     def truncate_json(
         line: pd.Series, op: pd.Series, cml: pd.Series
     ) -> pd.Series:
+        _drop_spark_zip_importers()
         out = []
         for ln, o, c in zip(line, op, cml):
-            if c:
+            if ln is not None:
                 try:
                     ln = _truncated(ln, o, c)
                 except (ValueError, RecursionError):
@@ -97,6 +102,47 @@ def _make_trunc_udf():
         return pd.Series(out)
 
     return truncate_json
+
+
+def _drop_spark_zip_importers() -> None:
+    """Take the zip importers over Spark's own archives out of
+    ``sys.path_importer_cache``.
+
+    A Python worker runs ``importlib.invalidate_caches()`` before every
+    task (``worker_util.setup_spark_files``, for the task's
+    ``addPyFile`` zips). Before Python 3.12 that makes each cached
+    ``zipimporter`` re-read its whole archive's directory: ``pyspark.zip``,
+    the py4j zip and a Spark jar, once per package imported from them,
+    16 reads and ~0.3 s of every task here. Those archives do not change
+    while a worker lives; a dropped importer is rebuilt on the next
+    import from ``zipimport._zip_directory_cache`` without a read. Other
+    zips (user ``addPyFile`` archives) keep their per-task refresh. From
+    3.12 on the refresh is lazy and this is a no-op."""
+    if sys.version_info >= (3, 12):
+        return
+    cache = sys.path_importer_cache
+    for key, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and _is_spark_archive(
+            finder.archive
+        ):
+            del cache[key]
+
+
+@functools.cache
+def _is_spark_archive(archive: str) -> bool:
+    """Whether ``archive`` is the zip ``pyspark`` or ``py4j`` was loaded
+    from, or a jar in ``$SPARK_HOME/jars``."""
+    import py4j
+    import pyspark
+
+    if archive in {
+        getattr(m.__loader__, "archive", None) for m in (pyspark, py4j)
+    }:
+        return True
+    home = os.environ.get("SPARK_HOME")
+    return bool(home) and os.path.dirname(
+        os.path.realpath(archive)
+    ) == os.path.realpath(os.path.join(home, "jars"))
 
 
 def _truncated(line: str, op: str, cml: str) -> str:
@@ -180,11 +226,24 @@ def route_mysql_cdc(
     partition_key = F.coalesce(key_chain, no_pk) if key_chain is not None else no_pk
 
     if any(r.column_max_length for r in routing.rules):
-        cml_chain = _first_match_chain(
-            probe, routing, lambda rule: F.lit(rule.max_length_str)
+        cml = F.coalesce(
+            _first_match_chain(
+                probe, routing, lambda rule: F.lit(rule.max_length_str)
+            ),
+            F.lit(""),
         )
-        value_out = _make_trunc_udf()(
-            F.col(value_col), F.col("op"), F.coalesce(cml_chain, F.lit(""))
+        # Only lines of a truncating rule cross to Python, and only
+        # valid UTF-8 (Arrow's string->pandas conversion fails the whole
+        # batch on anything else); every other line crosses as null and
+        # is forwarded raw.
+        line = F.col(value_col)
+        value_out = F.coalesce(
+            _make_trunc_udf()(
+                F.when((cml != "") & F.is_valid_utf8(line), line),
+                F.col("op"),
+                cml,
+            ),
+            line,
         )
     else:
         # No truncation configured anywhere → the reference's gson

@@ -8,7 +8,12 @@ the streaming twin of plans/cdc_queries.cdc_latest_state.
 The local sink is a parquet directory partitioned by pk-hash bucket (the
 batch is the unit of atomicity). Each batch runs one newest-per-key window
 over the state's touched buckets plus the batch, so the merge shuffle is
-proportional to those buckets and the batch, not the table. On a
+proportional to those buckets and the batch, not the table. The bucket is
+Spark's own hash-partition expression over the key, so the merge shuffles
+into a divisor of the bucket count and each task writes whole buckets,
+one file each (:func:`merge_partitions`). ``_bucketing.json`` in the
+table directory records that layout; a sink whose layout differs refuses
+the table instead of reading a key's rows from the wrong bucket. On a
 production lake the merge becomes a MERGE INTO against
 Delta/Iceberg/Hudi, which needs at most one source row per key: there
 the batch is first reduced to its newest change per key, then upserted.
@@ -73,19 +78,75 @@ def read_parquet_or_none(spark, path: str, schema=None) -> DataFrame | None:
         raise
 
 
+BUCKETING_FILE = "_bucketing.json"
+
+
+def _layout(num_buckets: int) -> dict:
+    """The bucketing a state table records in ``BUCKETING_FILE``."""
+    return {"hash": "murmur3", "num_buckets": num_buckets}
+
+
 def pk_bucket(pk_cols: list[str], num_buckets: int) -> F.Column:
-    """The state tables' partition column: ``pmod(xxhash64(pk), N)``."""
-    return F.pmod(
-        F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(num_buckets)
-    ).cast("int")
+    """The state tables' partition column: ``pmod(hash(pk), N)``, the
+    partition id Spark's ``HashPartitioning(pk, N)`` gives a row
+    (Murmur3, seed 42). For every ``n`` dividing ``N``,
+    ``pmod(hash(pk), n)`` is ``bucket mod n``, so a shuffle on the key
+    into ``n`` partitions puts all rows of a bucket in one task."""
+    return F.pmod(F.hash(*[F.col(c) for c in pk_cols]), F.lit(num_buckets))
 
 
-def stage_and_swap_buckets(path: str, live: DataFrame, touched) -> None:
+def merge_partitions(spark, num_buckets: int) -> int:
+    """The merge shuffle's partition count: the largest divisor of
+    ``num_buckets`` not above ``spark.sql.shuffle.partitions``. AQE never
+    coalesces an explicit count, so the merge write runs that many tasks,
+    each holding ``num_buckets / n`` whole buckets and writing one file
+    per bucket."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(
+        d for d in range(1, min(cap, num_buckets) + 1) if num_buckets % d == 0
+    )
+
+
+def check_bucketing(path: str, num_buckets: int) -> None:
+    """Refuse a state table laid out with another bucketing: the pruned
+    read would look for a key in the wrong bucket and the merge would
+    keep its old row next to the new one. The layout is recorded in
+    ``<path>/_bucketing.json`` on the first commit (Spark and pyarrow
+    skip ``_`` files); ``bucket=`` dirs without it were written with
+    ``pmod(xxhash64(pk), B)``, before the marker existed."""
+    import json
+    import os
+
+    want = _layout(num_buckets)
+    try:
+        with open(os.path.join(path, BUCKETING_FILE)) as f:
+            have = json.load(f)
+    except FileNotFoundError:
+        if os.path.isdir(path) and any(
+            d.startswith("bucket=") for d in os.listdir(path)
+        ):
+            have = {"hash": "xxhash64", "num_buckets": "unknown"}
+        else:
+            return
+    if have != want:
+        raise ValueError(
+            f"state table {path} is bucketed as {have}, this sink as "
+            f"{want}; rebuild the table (replay its changes into a new "
+            "path) to change its bucketing"
+        )
+
+
+def stage_and_swap_buckets(
+    path: str, live: DataFrame, touched, num_buckets: int
+) -> None:
     """Stage ONLY the touched pk-hash buckets of a state table, then swap
     each bucket dir in: replaced buckets point at the staged write; a
     touched bucket whose keys all vanished has no staged dir → its dir is
     removed. I/O stays O(touched buckets), and the live table is never
-    read-and-overwritten in the same job."""
+    read-and-overwritten in the same job. The first commit records the
+    table's bucketing (:func:`check_bucketing`) before any bucket dir
+    appears."""
+    import json
     import os
     import shutil
 
@@ -93,6 +154,10 @@ def stage_and_swap_buckets(path: str, live: DataFrame, touched) -> None:
     shutil.rmtree(stage, ignore_errors=True)
     live.write.mode("overwrite").partitionBy("bucket").parquet(stage)
     os.makedirs(path, exist_ok=True)
+    marker = os.path.join(path, BUCKETING_FILE)
+    if not os.path.exists(marker):
+        with open(marker, "w") as f:
+            json.dump(_layout(num_buckets), f)
     for b in touched:
         src = f"{stage}/bucket={b}"
         dst = f"{path}/bucket={b}"
@@ -105,7 +170,7 @@ def stage_and_swap_buckets(path: str, live: DataFrame, touched) -> None:
 class ParquetUpsertSink:
     """foreachBatch target: maintains a latest-state parquet table.
 
-    The state table is partitioned by ``pmod(xxhash64(pk), num_buckets)``
+    The state table is partitioned by ``pmod(hash(pk), num_buckets)``
     and each batch rewrites ONLY the buckets containing changed keys
     (partition-pruned read of the current state, staged bucket swap).
     With B buckets and a batch touching k of them, merge I/O drops from
@@ -148,10 +213,18 @@ class ParquetUpsertSink:
         self.retain_tombstones = retain_tombstones
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        check_bucketing(self.path, self.num_buckets)
+        live, touched = self._merged(batch)
+        stage_and_swap_buckets(self.path, live, touched, self.num_buckets)
+
+    def _merged(self, batch: DataFrame) -> tuple[DataFrame, list[int]]:
         """One newest-per-key window over (touched state buckets ∪ the
         batch's parsed changes) ranks a key's changes in this batch and
         its stored row together. The state is read with the changes'
-        schema, so no inference job runs."""
+        schema, so no inference job runs. The window's input is
+        hash-partitioned on the key into :func:`merge_partitions` tasks,
+        which satisfies the window's distribution (one exchange)."""
+        spark = batch.sparkSession
         changes = parse_change_events(batch, self.pk_cols)
         if self.transform is not None:
             changes = self.transform(changes)
@@ -159,17 +232,18 @@ class ParquetUpsertSink:
             "bucket", pk_bucket(self.pk_cols, self.num_buckets)
         )
         touched = [r.bucket for r in changes.select("bucket").distinct().collect()]
-        current = read_parquet_or_none(
-            batch.sparkSession, self.path, changes.schema
-        )
+        current = read_parquet_or_none(spark, self.path, changes.schema)
         if current is not None:
             changes = current.filter(
                 F.col("bucket").isin(touched)  # partition-pruned read
             ).unionByName(changes)
+        changes = changes.repartition(
+            merge_partitions(spark, self.num_buckets), *self.pk_cols
+        )
         live = latest_per_key(changes, self.pk_cols)
         if not self.retain_tombstones:
             live = live.filter(F.col("op") != "d")
-        stage_and_swap_buckets(self.path, live, touched)
+        return live, touched
 
 
 class Scd2IntervalSink:
@@ -200,6 +274,7 @@ class Scd2IntervalSink:
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
+        check_bucketing(self.path, self.num_buckets)
         self.batch_ids.append(batch_id)
         changes = (
             parse_change_events(batch, self.pk_cols)
@@ -230,7 +305,11 @@ class Scd2IntervalSink:
                 current.filter(F.col("bucket").isin(touched))
                 .withColumnRenamed("valid_from", "ts_ms")
             )
-        log = log.dropDuplicates([*self.pk_cols, "ts_ms", "op"])
+        # hash-partitioned on the key into whole buckets per task; the
+        # partitioning satisfies both dropDuplicates and the window
+        log = log.repartition(
+            merge_partitions(spark, self.num_buckets), *self.pk_cols
+        ).dropDuplicates([*self.pk_cols, "ts_ms", "op"])
         # ("ts_ms", "op") tie-break: two ops at the same ts_ms (real in
         # CDC feeds) would otherwise make lead() nondeterministic across
         # runs; mirrored in the cdc_scd2/streaming_scd2 oracles
@@ -248,7 +327,7 @@ class Scd2IntervalSink:
             "bucket",
         )
         try:
-            stage_and_swap_buckets(self.path, live, touched)
+            stage_and_swap_buckets(self.path, live, touched, self.num_buckets)
         finally:
             changes.unpersist()
 

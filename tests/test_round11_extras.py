@@ -315,3 +315,30 @@ def test_degeneracy_probe_thread_is_bounded(spark):
         assert not new_probes(), "probe thread parked past its bound"
     finally:
         D._PROBE_MAX_WAIT_S = old
+
+
+def test_degeneracy_probe_gives_up_when_peek_fails(spark, monkeypatch):
+    """If the non-blocking peek itself raises, the watcher returns at
+    once instead of parking on an unbounded ``obs.get`` for a plan that
+    never runs."""
+    import threading
+
+    from flink_cdc_msk_spark.operators import dedup as D
+
+    def broken_peek(obs):
+        raise RuntimeError("peek unavailable")
+
+    monkeypatch.setattr(D, "_observation_ready", broken_peek)
+    pre = set(threading.enumerate())
+    docs = spark.createDataFrame(
+        [(0, "a b c"), (1, "a b c")], "doc_id long, text string"
+    )
+    D.jaccard_pairs(docs, 0.8)  # plan constructed, NO action
+    probes = [
+        t
+        for t in threading.enumerate()
+        if t.name == "jaccard-degeneracy-probe" and t not in pre
+    ]
+    for t in probes:
+        t.join(2.0)
+    assert not [t for t in probes if t.is_alive()], "probe parked on obs.get"

@@ -756,3 +756,91 @@ def test_mongo_null_lines_dropped(spark):
     df = spark.createDataFrame([(mongo_event(),), (None,)], "value string")
     [r] = route_mongo_cdc(df, topic_prefix="cdc_").collect()
     assert r.value == mongo_event()
+
+
+def test_invalid_utf8_line_on_truncating_table_forwarded_raw(spark, tmp_path):
+    """A line with invalid UTF-8 bytes never crosses to Python (Arrow's
+    string conversion would fail the batch): on a truncating table it is
+    routed and forwarded byte for byte, untruncated; its valid
+    neighbours are still truncated."""
+    good = mysql_event(table="product_01", after={"pid": 1, "col1": "g" * 14})
+    bad = [
+        mysql_event(table=t, after={"pid": 7, "col1": "BAD"})
+        .encode()
+        .replace(b"BAD", b"a\xff\xfeb" + b"z" * 12)
+        for t in ("product_01", "product")
+    ]
+    path = tmp_path / "lines.txt"
+    path.write_bytes(b"\n".join([good.encode(), *bad]) + b"\n")
+    out = route_mysql_cdc(
+        spark.read.text(str(path)), ROUTING, topic_prefix="cdc_"
+    ).select("partition_key", F.col("value").cast("binary").alias("raw"))
+    got = {r.partition_key: bytes(r.raw) for r in out.collect()}
+    assert got == {
+        "test_db.product_01.1": json.dumps(
+            json.loads(good.replace("g" * 14, "g" * 10)), separators=(",", ":")
+        ).encode(),
+        "test_db.product_01.7": bad[0],
+        "test_db.product.7": bad[1],
+    }
+
+
+def _zip_package(path, pkg, modules):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr(f"{pkg}/__init__.py", "")
+        for m in modules:
+            z.writestr(f"{pkg}/{m}.py", f"NAME = {m!r}\n")
+
+
+def test_drop_spark_zip_importers(tmp_path, monkeypatch):
+    """The truncation UDF's worker-side helper drops the cached zip
+    importers over Spark's archives (here a jar in ``$SPARK_HOME/jars``),
+    so ``importlib.invalidate_caches()`` re-reads no Spark archive; a
+    sibling module still imports from it. A non-Spark zip's importer is
+    kept and keeps its per-task refresh."""
+    import importlib
+    import sys
+    import zipimport
+
+    from flink_cdc_msk_spark.operators import route as route_mod
+
+    (tmp_path / "jars").mkdir()
+    spark_jar = str(tmp_path / "jars" / "spk.jar")
+    user_zip = str(tmp_path / "user.zip")
+    _zip_package(spark_jar, "spkpkg", ["a", "b"])
+    _zip_package(user_zip, "usrpkg", ["a", "b"])
+    monkeypatch.setenv("SPARK_HOME", str(tmp_path))
+    monkeypatch.syspath_prepend(spark_jar)
+    monkeypatch.syspath_prepend(user_zip)
+    for m in ("spkpkg", "spkpkg.a", "spkpkg.b", "usrpkg", "usrpkg.a"):
+        monkeypatch.delitem(sys.modules, m, raising=False)
+    importlib.import_module("spkpkg.a")
+    importlib.import_module("usrpkg.a")
+
+    def archives():
+        return [
+            f.archive
+            for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+        ]
+
+    assert archives().count(spark_jar) == 2  # the jar and its package
+    reads = []
+    real_read = zipimport._read_directory
+
+    def counting_read(archive):
+        reads.append(archive)
+        return real_read(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    route_mod._drop_spark_zip_importers()
+    importlib.invalidate_caches()
+    assert importlib.import_module("spkpkg.b").NAME == "b"
+    if sys.version_info < (3, 12):
+        assert spark_jar not in reads
+        assert user_zip in reads
+        assert archives().count(user_zip) == 2
+    for m in ("spkpkg", "spkpkg.a", "spkpkg.b", "usrpkg", "usrpkg.a"):
+        sys.modules.pop(m, None)

@@ -1044,7 +1044,7 @@ def _replay(batches, retain_tombstones):
 
 
 @pytest.mark.parametrize("retain_tombstones", [False, True])
-@pytest.mark.parametrize("num_buckets", [1, 8])
+@pytest.mark.parametrize("num_buckets", [1, 6, 8])
 def test_upsert_merge_equals_replay(
     spark, tmpdir, num_buckets, retain_tombstones
 ):
@@ -1089,3 +1089,108 @@ def test_upsert_transform_sees_every_change(spark, tmpdir):
     )
     want = _replay(MERGE_BATCHES[:2], True)
     assert got == [(*row, row[3].upper()) for row in want]
+
+
+# ---- bucket-aligned merge: pk_bucket is Spark's hash partition id ----
+
+
+def _keyed_batch(spark, keys, ts):
+    return spark.createDataFrame(
+        [(_change("u", k, ts + k, f"v{ts}"),) for k in keys], "value string"
+    )
+
+
+def test_upsert_merge_plan_one_exchange_aligned_with_buckets(spark, tmpdir):
+    """The merge hash-partitions (pruned state ∪ changes) on the key into
+    the largest divisor of the bucket count within the shuffle
+    partitions: one exchange, nothing between it and the window, and
+    the write's result stage runs that many tasks (AQE leaves an
+    explicit count alone)."""
+    import re
+
+    from flink_cdc_msk_spark.streaming.compaction import merge_partitions
+
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle == 4
+    assert [merge_partitions(spark, b) for b in (1, 6, 8, 16)] == [1, 3, 4, 4]
+    sink = ParquetUpsertSink(f"{tmpdir}/plan", ["o_orderkey"], num_buckets=16)
+    sink(_keyed_batch(spark, range(200), 0), 0)
+    live, _ = sink._merged(_keyed_batch(spark, range(0, 400, 2), 1000))
+    plan = live._jdf.queryExecution().executedPlan().toString()
+    # the one exchange sits below the window (the plan prints top-down)
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(o_orderkey#\d+, 4\)", plan)
+    assert plan.index("Window [") < plan.index("Exchange")
+
+    sc = spark.sparkContext
+    group = f"merge-tasks-{id(sink)}"
+    sc.setJobGroup(group, "merge write")
+    try:
+        sink(_keyed_batch(spark, range(0, 400, 2), 1000), 1)
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    result_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert result_stage.numTasks == 4
+
+
+@pytest.mark.parametrize("num_buckets", [8, 16])
+def test_upsert_merge_writes_one_file_per_bucket(spark, tmpdir, num_buckets):
+    """Each merge task holds whole buckets, so one batch leaves exactly
+    one parquet file in every ``bucket=b`` dir, and every row sits in
+    the bucket Spark's hash partitioning gives its key."""
+    import glob
+    import os
+
+    path = f"{tmpdir}/files_{num_buckets}"
+    sink = ParquetUpsertSink(path, ["o_orderkey"], num_buckets=num_buckets)
+    sink(_keyed_batch(spark, range(300), 0), 0)
+    dirs = sorted(glob.glob(f"{path}/bucket=*"))
+    assert len(dirs) == num_buckets
+    assert all(len(glob.glob(f"{d}/*.parquet")) == 1 for d in dirs)
+    state = spark.read.parquet(path)
+    assert state.count() == 300
+    assert state.filter(
+        F.col("bucket")
+        != F.pmod(F.hash(F.col("o_orderkey")), F.lit(num_buckets))
+    ).count() == 0
+    with open(os.path.join(path, "_bucketing.json")) as f:
+        assert json.load(f) == {"hash": "murmur3", "num_buckets": num_buckets}
+
+
+def test_state_table_refuses_other_bucketing(spark, tmpdir):
+    """Reopening a state table with another bucket count would read a
+    key's stored row from the wrong bucket and keep both rows; the sink
+    refuses instead, naming both layouts. A table with ``bucket=`` dirs
+    but no layout marker (the older xxhash64 layout) is refused too.
+    Reopening with the same layout keeps merging."""
+    import os
+
+    from flink_cdc_msk_spark.streaming.compaction import Scd2IntervalSink
+
+    path = f"{tmpdir}/live"
+    ParquetUpsertSink(path, ["o_orderkey"], num_buckets=8)(
+        _keyed_batch(spark, range(50), 0), 0
+    )
+    # a few keys: most land in a 16-bucket whose dir the 8-bucket table
+    # never had, so an unguarded merge misses their stored rows
+    with pytest.raises(ValueError, match="'num_buckets': 8.*'num_buckets': 16"):
+        ParquetUpsertSink(path, ["o_orderkey"], num_buckets=16)(
+            _keyed_batch(spark, range(5), 100), 1
+        )
+    with pytest.raises(ValueError, match="num_buckets"):
+        Scd2IntervalSink(path, ["o_orderkey"], num_buckets=4)(
+            _keyed_batch(spark, range(5), 100), 1
+        )
+    ParquetUpsertSink(path, ["o_orderkey"], num_buckets=8)(
+        _keyed_batch(spark, range(5), 100), 1
+    )
+    ids = [r.o_orderkey for r in spark.read.parquet(path).collect()]
+    assert sorted(ids) == sorted(str(k) for k in range(50))
+
+    os.remove(f"{path}/_bucketing.json")
+    with pytest.raises(ValueError, match="xxhash64"):
+        ParquetUpsertSink(path, ["o_orderkey"], num_buckets=8)(
+            _keyed_batch(spark, range(50), 200), 2
+        )

@@ -320,7 +320,8 @@ def _image_line(table, op, before, after):
 
 # (case, line, partition_key, partition of 12). A key column reads as its
 # JSON text (numbers as Jackson renders them); a PK key repeated in one
-# image keeps its last value, as the reference's Gson parse does.
+# image keeps its last value, as the reference's Gson parse does; a row
+# with a null key column takes the rule's no_pk key.
 KEY_PARSE_CASES = [
     ("dup_pk_key", _image_line("orders", "c", "null", '{"id":1,"v":"x","id":2}'),
      "shop.orders.2", 11),
@@ -343,24 +344,24 @@ KEY_PARSE_CASES = [
     ("boolean_pk", _image_line("orders", "c", "null", '{"id":true}'),
      "shop.orders.true", 3),
     ("null_pk", _image_line("orders", "c", "null", '{"id":null}'),
-     "shop.orders.", 9),
+     "shop.orders.no_pk", 4),
     ("escaped_string_pk", _image_line("orders", "c", "null", '{"id":"a\\"b.c"}'),
      'shop.orders.a"b.c', 5),
     ("composite_one_null",
      _image_line("lines", "c", "null", '{"order_id":3,"line_no":null}'),
-     "shop.lines.3", 8),
+     "shop.lines.no_pk", 6),
     ("composite_missing_one", _image_line("lines", "c", "null", '{"line_no":2}'),
-     "shop.lines.2", 7),
+     "shop.lines.no_pk", 6),
     ("missing_pk_column", _image_line("orders", "c", "null", '{"v":1}'),
-     "shop.orders.", 9),
+     "shop.orders.no_pk", 4),
     ("delete_reads_before", _image_line("orders", "d", '{"id":5}', "null"),
      "shop.orders.5", 8),
     ("array_before", _image_line("lines", "d", "[1,2]", "null"),
-     "shop.lines.", 11),
+     "shop.lines.no_pk", 6),
     ("scalar_before", _image_line("orders", "d", "5", '{"id":6}'),
-     "shop.orders.", 9),
+     "shop.orders.no_pk", 4),
     ("scalar_after", _image_line("orders", "c", "null", '"id"'),
-     "shop.orders.", 9),
+     "shop.orders.no_pk", 4),
     ("case_variant_pks_upper",
      _image_line("users", "c", "null", '{"id":"lower","ID":"U1"}'),
      "shop.users.U1", 2),
@@ -388,6 +389,33 @@ def test_key_column_parse_edge_cases(spark):
     for case, line, key, partition in KEY_PARSE_CASES:
         assert got[line] == (key, partition), case
         assert java_partition_py(key, 12) == partition, case
+
+
+def test_null_key_column_routes_to_no_pk(spark):
+    """A key column that is null must not drop out of the key: a missing
+    column, or one lost to a partial parse (a leading-zero number after
+    the key), would give ``db.table.``, and the composite keys (1, null)
+    and (null, 1) would both give ``db.table.1``. Each takes the rule's
+    no_pk key; a complete key is unchanged."""
+    cases = [
+        (_image_line("orders", "c", "null", '{"v":1}'), "shop.orders.no_pk"),
+        # source before the image: the partial parse keeps db and table
+        ('{"source":{"db":"shop","table":"orders"},"op":"c",'
+         '"after":{"id":6,"n":007}}', "shop.orders.no_pk"),
+        (_image_line("lines", "c", "null", '{"order_id":1,"line_no":null}'),
+         "shop.lines.no_pk"),
+        (_image_line("lines", "c", "null", '{"order_id":null,"line_no":1}'),
+         "shop.lines.no_pk"),
+        (_image_line("lines", "c", "null", '{"order_id":1,"line_no":1}'),
+         "shop.lines.1.1"),
+        (_image_line("orders", "c", "null", '{"id":6,"n":7}'), "shop.orders.6"),
+    ]
+    df = spark.createDataFrame([(line,) for line, _ in cases], "value string")
+    got = {
+        r.value: r.partition_key
+        for r in route_mysql_cdc(df, KEY_ROUTING, topic="t").collect()
+    }
+    assert [got[line] for line, _ in cases] == [key for _, key in cases]
 
 
 # ------------------------- config / params (no Spark session needed)

@@ -306,6 +306,7 @@ def test_bucketed_compaction_empties_fully_deleted_bucket(spark, tmpdir):
     """A batch that deletes EVERY key of one bucket must empty that bucket
     dir (dynamic partition overwrite alone would skip it)."""
     import json as _json
+    import os
 
     def env(op, key, ts):
         return _json.dumps(
@@ -333,7 +334,12 @@ def test_bucketed_compaction_empties_fully_deleted_bucket(spark, tmpdir):
     b2 = spark.createDataFrame(
         [(env("d", k, 2),) for k in keys], "value string"
     )
+    assert sink.last_commit["batch_id"] == 0
+    assert sum(sink.last_commit["buckets"].values()) == 20
     sink(b2, 1)
+    # the merge reports the emptied bucket, and its dir is gone
+    assert sink.last_commit == {"batch_id": 1, "buckets": {victim: 0}}
+    assert not os.path.exists(f"{tmpdir}/state_e/bucket={victim}")
     state2 = spark.read.parquet(f"{tmpdir}/state_e")
     assert state2.filter(F.col("bucket") == victim).count() == 0
     assert state2.count() == 20 - len(keys)
@@ -995,7 +1001,7 @@ def test_checkpoint_restart_after_torn_log_write_is_exactly_once(
     )
 
 
-# ---- ParquetUpsertSink: one newest-per-key window over state ∪ batch ----
+# ---- ParquetUpsertSink: one fold per bucket over state ∪ batch ----
 
 
 def _change(op, key, ts, v):
@@ -1067,7 +1073,7 @@ def test_upsert_merge_equals_replay(
 
 def test_upsert_transform_sees_every_change(spark, tmpdir):
     """``transform`` runs row-wise on the parsed change rows before the
-    one merge window; its columns land in the state table."""
+    merge; its columns land in the state table."""
     path = f"{tmpdir}/state_t"
     seen = []
 
@@ -1091,6 +1097,84 @@ def test_upsert_transform_sees_every_change(spark, tmpdir):
     assert got == [(*row, row[3].upper()) for row in want]
 
 
+def test_upsert_transform_typed_columns_round_trip(spark, tmpdir):
+    """Columns a transform adds keep their Spark types and values through
+    the merge tasks' parquet files: timestamp, decimal and struct, over
+    two merges (the second reads and rewrites the first's files)."""
+    from flink_cdc_msk_spark.streaming.compaction import parse_change_events
+
+    def typed(changes):
+        return changes.withColumns(
+            {
+                "at": F.timestamp_millis("ts_ms"),
+                "amount": (F.col("ts_ms") / 7).cast("decimal(12,2)"),
+                "detail": F.struct(
+                    changes["payload"]["v"].alias("v"),
+                    F.col("ts_ms").alias("ts"),
+                ),
+            }
+        )
+
+    path = f"{tmpdir}/state_typed"
+    sink = ParquetUpsertSink(
+        path, ["o_orderkey"], num_buckets=4, transform=typed,
+        retain_tombstones=True,
+    )
+    for batch_id, batch in enumerate(MERGE_BATCHES[:2]):
+        lines = [(_change(*c),) for c in batch]
+        sink(spark.createDataFrame(lines, "value string"), batch_id)
+    state = spark.read.parquet(path)
+    types = dict(state.dtypes)
+    assert types["at"] == "timestamp"
+    assert types["amount"] == "decimal(12,2)"
+    assert types["detail"] == "struct<v:string,ts:bigint>"
+    latest = [
+        (_change(op, int(k), ts, v),)
+        for k, op, ts, v in _replay(MERGE_BATCHES[:2], True)
+    ]
+    want = typed(
+        parse_change_events(
+            spark.createDataFrame(latest, "value string"), ["o_orderkey"]
+        )
+    )
+    cols = ["o_orderkey", "op", "ts_ms", "at", "amount", "detail"]
+    assert sorted(state.select(cols).collect()) == sorted(
+        want.select(cols).collect()
+    )
+
+
+def test_upsert_merges_a_table_written_by_spark(spark, tmpdir):
+    """State tables written before the merge tasks wrote their own files
+    have Spark's writer layout: part files without page checksums, Hadoop
+    ``.crc`` sidecars, a ``_SUCCESS`` marker. The next merge reads them."""
+    import glob
+
+    from flink_cdc_msk_spark.streaming.compaction import (
+        BUCKETING_FILE,
+        parse_change_events,
+        pk_bucket,
+    )
+
+    path = f"{tmpdir}/spark_written"
+    first = [(_change(*c),) for c in MERGE_BATCHES[0]]
+    parse_change_events(
+        spark.createDataFrame(first, "value string"), ["o_orderkey"]
+    ).withColumn("bucket", pk_bucket(["o_orderkey"], 4)).write.partitionBy(
+        "bucket"
+    ).parquet(path)
+    with open(f"{path}/{BUCKETING_FILE}", "w") as f:
+        json.dump({"hash": "murmur3", "num_buckets": 4}, f)
+    assert glob.glob(f"{path}/bucket=*/.*.crc")
+    sink = ParquetUpsertSink(path, ["o_orderkey"], num_buckets=4)
+    second = [(_change(*c),) for c in MERGE_BATCHES[1]]
+    sink(spark.createDataFrame(second, "value string"), 1)
+    got = sorted(
+        (r.o_orderkey, r.op, r.ts_ms, r.payload["v"])
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == _replay(MERGE_BATCHES[:2], False)
+
+
 # ---- bucket-aligned merge: pk_bucket is Spark's hash partition id ----
 
 
@@ -1101,11 +1185,13 @@ def _keyed_batch(spark, keys, ts):
 
 
 def test_upsert_merge_plan_one_exchange_aligned_with_buckets(spark, tmpdir):
-    """The merge hash-partitions (pruned state ∪ changes) on the key into
-    the largest divisor of the bucket count within the shuffle
-    partitions: one exchange, nothing between it and the window, and
-    the write's result stage runs that many tasks (AQE leaves an
-    explicit count alone)."""
+    """The merge is one action: the batch's changes hash-partitioned on
+    the key into the largest divisor of the bucket count within the
+    shuffle partitions (one exchange), then one MapInArrow that folds
+    and writes each task's buckets. No window, no Spark file writer: it
+    runs at most 2 jobs (AQE submits the shuffle stage as its own job),
+    and its result stage runs that many tasks (AQE leaves an explicit
+    count alone)."""
     import re
 
     from flink_cdc_msk_spark.streaming.compaction import merge_partitions
@@ -1115,23 +1201,31 @@ def test_upsert_merge_plan_one_exchange_aligned_with_buckets(spark, tmpdir):
     assert [merge_partitions(spark, b) for b in (1, 6, 8, 16)] == [1, 3, 4, 4]
     sink = ParquetUpsertSink(f"{tmpdir}/plan", ["o_orderkey"], num_buckets=16)
     sink(_keyed_batch(spark, range(200), 0), 0)
-    live, _ = sink._merged(_keyed_batch(spark, range(0, 400, 2), 1000))
-    plan = live._jdf.queryExecution().executedPlan().toString()
-    # the one exchange sits below the window (the plan prints top-down)
+    merge = sink._merged(
+        _keyed_batch(spark, range(0, 400, 2), 1000), f"{tmpdir}/plan__stage"
+    )
+    plan = merge._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
-    assert re.search(r"Exchange hashpartitioning\(o_orderkey#\d+, 4\)", plan)
-    assert plan.index("Window [") < plan.index("Exchange")
+    assert len(
+        re.findall(r"Exchange hashpartitioning\(o_orderkey#\d+, 4\)", plan)
+    ) == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Window" not in plan, plan
+    assert "InsertIntoHadoopFsRelationCommand" not in plan, plan
 
     sc = spark.sparkContext
     group = f"merge-tasks-{id(sink)}"
-    sc.setJobGroup(group, "merge write")
+    sc.setJobGroup(group, "merge")
     try:
         sink(_keyed_batch(spark, range(0, 400, 2), 1000), 1)
     finally:
         sc.setJobGroup("", "")
     tracker = sc.statusTracker()
-    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
-    result_stage = tracker.getStageInfo(max(write_job.stageIds))
+    jobs = list(tracker.getJobIdsForGroup(group))
+    assert 1 <= len(jobs) <= 2, jobs
+    result_stage = tracker.getStageInfo(
+        max(tracker.getJobInfo(max(jobs)).stageIds)
+    )
     assert result_stage.numTasks == 4
 
 
